@@ -266,9 +266,9 @@ def _estimated_scan_splits(df: DataFrame, files: "list[str] | None" = None) -> i
         files = df.inputFiles()
     if not files:
         return 0
-    raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    digits = "".join(ch for ch in raw if ch.isdigit()) or "134217728"
-    max_bytes = int(digits)
+    # the parsed SQLConf value: the raw string may carry a unit suffix
+    # ("64m", "134217728b") that only Spark's bytes-conf parser reads right
+    max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     try:
         jpath = spark._jvm.org.apache.hadoop.fs.Path
         hconf = spark._jsc.hadoopConfiguration()
@@ -914,6 +914,59 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
+#: Bytes per canonical edge row (two longs) when the CC edge set is
+#: sized against the session's TINY broadcast bound.
+_EDGE_BYTES = 16
+
+
+def _min_id_components(src, dst):
+    """Exact connected components of an edge list, in numpy →
+    ``(ids, labels)`` over every endpoint, ``labels`` = the minimum id
+    in each node's component.
+
+    Min-label hooking with pointer jumping over ``np.unique``-compacted
+    ids (sorted, so the smallest index is the smallest id): each pass
+    hangs every edge's larger root under its smaller root, then jumps
+    every node straight to its root.  A pass that finds a split edge
+    removes at least one root, so the loop ends; once every edge joins
+    equal roots each component has one root, and that root is its
+    minimum because a node only ever points at smaller indices.
+    """
+    import numpy as np
+
+    ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    a, b = inv[: len(src)], inv[len(src):]
+    parent = np.arange(len(ids))
+    while True:
+        ra, rb = parent[a], parent[b]
+        split = ra != rb
+        if not split.any():
+            return ids, ids[parent]
+        np.minimum.at(parent, np.maximum(ra, rb)[split], np.minimum(ra, rb)[split])
+        while True:
+            up = parent[parent]
+            if np.array_equal(up, parent):
+                break
+            parent = up
+
+
+def _driver_attach(edges: DataFrame) -> DataFrame:
+    """Finish connected components of a TINY canonical edge set on the
+    driver: one Arrow collect, :func:`_min_id_components`, and the
+    ``(src, l)`` attach frame (every non-minimum node → its component
+    minimum) back through ``createDataFrame``."""
+    import pandas as pd
+
+    pdf = edges.toPandas()
+    ids, labels = _min_id_components(
+        pdf["src"].to_numpy("int64"), pdf["dst"].to_numpy("int64")
+    )
+    moved = ids != labels
+    return edges.sparkSession.createDataFrame(
+        pd.DataFrame({"src": ids[moved], "l": labels[moved]}), "src long, l long"
+    )
+
+
 def dup_clusters(
     pairs: DataFrame,
     nodes: DataFrame | None = None,
@@ -947,6 +1000,17 @@ def dup_clusters(
     still changing after ``max_rounds`` the loop RAISES rather than
     returning half-merged clusters.
 
+    **In-memory finish**: the edge count is known after every
+    checkpoint (the initial canonical set and each round's).  Once the
+    edge set fits the session's TINY bound —
+    ``spark.sql.autoBroadcastJoinThreshold``, 20 MiB by default (the
+    reference's TINY input class), at 16 B per edge — it is collected
+    once through Arrow and finished exactly on the driver (numpy
+    min-label hooking with pointer jumping, :func:`_min_id_components`).
+    That replaces the remaining rounds and the exact fixpoint job, whose
+    per-job scheduling dominates once the data is small.  A bound ≤ 0
+    (broadcast off) keeps the loop fully distributed to its fixpoint.
+
     Scale shape: each round is two (aggregate + self-join) pairs over
     the edge list — hash shuffles on node id only, no collect_list, no
     driver traffic beyond two scalar counts for the convergence probe.
@@ -954,12 +1018,16 @@ def dup_clusters(
     truncates the exponentially-deepening lineage and doubles as the
     cache.  Edge count never exceeds ~|V| after the first round (each
     node keeps ≤1 outgoing edge post-small-star), so intermediate state
-    SHRINKS toward |V| regardless of input pair inflation.
+    SHRINKS toward |V| regardless of input pair inflation: on a huge
+    corpus the distributed rounds do the shrinking and the driver takes
+    only the tail, never more than the TINY bound of edges (~1.3M at
+    20 MiB).
 
     ``nodes`` (a frame containing ``node_col``) adds isolated docs as
     singleton clusters; without it only paired nodes are labeled.
-    ``stats`` (optional dict) receives ``{"rounds": r}`` for
-    convergence introspection.
+    ``stats`` (optional dict) receives ``{"rounds": r, "driver_finish":
+    b}`` — ``r`` distributed rounds run, ``b`` whether the driver
+    finished the components.
     """
     raw = pairs.select(
         F.col(id_a).cast("long").alias("src"), F.col(id_b).cast("long").alias("dst")
@@ -1004,34 +1072,43 @@ def dup_clusters(
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
+    # the parsed SQLConf value, so a unit-suffixed bound ("20m") reads right
+    tiny = pairs.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     converged = n_edges == 0
+    driver_finish = not converged and n_edges * _EDGE_BYTES <= tiny
     rounds = 0
-    while not converged and rounds < max_rounds:
+    while not (converged or driver_finish) and rounds < max_rounds:
         rounds += 1
         new_edges, new_count, new_hash = ck_digest(_small_star(_large_star(edges)))
+        driver_finish = new_count * _EDGE_BYTES <= tiny
         # digest match → confirm set equality exactly (both distinct
         # sets, equal size, B \ A == ∅); the hash pre-filter makes a
-        # false trigger of this join astronomically rare, never wrong
-        if (
-            new_count == n_edges
+        # false trigger of this join astronomically rare, never wrong.
+        # A TINY set skips it: the driver finish is exact either way.
+        converged = (
+            not driver_finish
+            and new_count == n_edges
             and new_hash == h_edges
             and new_edges.subtract(edges).isEmpty()
-        ):
-            converged = True
+        )
         edges = new_edges
         n_edges, h_edges = new_count, new_hash
     if stats is not None:
         stats["rounds"] = rounds
-    if not converged:
+        stats["driver_finish"] = driver_finish
+    if driver_finish:
+        attach = _driver_attach(edges)
+    elif not converged:
         raise RuntimeError(
             f"dup_clusters: edge set still changing after {max_rounds} "
             "large-star/small-star rounds — rounds needed is O(log n), so "
             "this indicates an extreme graph; raise max_rounds"
         )
-
-    # fixed point = star forest: every non-minimum node carries exactly one
-    # canonical edge to its component minimum (min() guards the invariant)
-    attach = edges.groupBy("src").agg(F.min("dst").alias("l"))
+    else:
+        # fixed point = star forest: every non-minimum node carries exactly
+        # one canonical edge to its component minimum (min() guards the
+        # invariant)
+        attach = edges.groupBy("src").agg(F.min("dst").alias("l"))
     labels = base.join(attach, base["n"] == attach["src"], "left").select(
         "n", F.coalesce(F.col("l"), F.col("n")).alias("l")
     )
@@ -1081,7 +1158,10 @@ def dedup_corpus(
     ``lsh_kwargs`` pass through to :func:`minhash_lsh_pairs` otherwise.
 
     Scale shape: pair generation is band-bucketed (never all-pairs),
-    components converge in O(log n) rounds, and the final keeper join is
+    components converge in O(log n) distributed rounds, finishing on the
+    driver once the edge set fits the TINY broadcast bound (so a small
+    or heavily-shrunk pair list costs a few jobs, not a job per round
+    plus a fixpoint check), and the final keeper join is
     a plain hash join on ``id_col`` — the keeper set is ≤ |docs| rows of
     (id, size), never the documents' payload, so only slim keys shuffle
     twice and the corpus payload shuffles once.

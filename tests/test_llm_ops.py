@@ -1,5 +1,7 @@
 """Text analysis / dedup / similarity / multimodal tests."""
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -30,6 +32,40 @@ from asakusafw_spark_spark.functions.multimodal import (
     fake_frame_sampler,
     FEATURE_DIM,
 )
+
+
+BROADCAST_CONF = "spark.sql.autoBroadcastJoinThreshold"
+
+
+@contextlib.contextmanager
+def _sql_conf(spark, key, value):
+    """Set a session SQL conf for the block; restore it in ``finally``."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
+def _union_find_labels(edges):
+    """Reference labeling: endpoint → minimum id of its component."""
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
 
 
 @pytest.fixture(scope="module")
@@ -484,23 +520,26 @@ def test_dup_clusters_without_nodes_and_round_bound(spark):
     from asakusafw_spark_spark.functions import dup_clusters
 
     # chain 0-1-2-...-6: diameter 6, but large-star/small-star needs only
-    # O(log n) rounds — well under the default bound
+    # O(log n) rounds — well under the default bound.  Broadcast off keeps
+    # the TINY edge set in the distributed loop (no driver finish).
     chain = spark.createDataFrame([Row(id_a=i, id_b=i + 1) for i in range(6)])
-    stats = {}
-    out = dup_clusters(chain, stats=stats).collect()
-    assert {r.cluster_id for r in out} == {0}
-    assert len(out) == 7 and sum(r.is_keeper for r in out) == 1
-    assert stats["rounds"] <= 6
+    with _sql_conf(spark, BROADCAST_CONF, "-1"):
+        stats = {}
+        out = dup_clusters(chain, stats=stats).collect()
+        assert {r.cluster_id for r in out} == {0}
+        assert len(out) == 7 and sum(r.is_keeper for r in out) == 1
+        assert stats["rounds"] <= 6
 
-    with pytest.raises(RuntimeError, match="still changing"):
-        dup_clusters(chain, max_rounds=1)
+        with pytest.raises(RuntimeError, match="still changing"):
+            dup_clusters(chain, max_rounds=1)
 
 
 def test_dup_clusters_path_graph_logarithmic_rounds(spark):
     """Large-star/small-star converges in O(log n) rounds regardless of
     component DIAMETER: a 10k-link path (the adversarial case that kills
     min-label propagation — VERDICT r02 Missing #2) must finish in
-    ≤ 2·log2(n) rounds."""
+    ≤ 2·log2(n) rounds.  Broadcast off keeps the (TINY) path in the
+    distributed loop."""
     import math
 
     from asakusafw_spark_spark.functions import dup_clusters
@@ -509,9 +548,10 @@ def test_dup_clusters_path_graph_logarithmic_rounds(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
-    stats = {}
-    out = dup_clusters(pairs, stats=stats)
-    rows = out.collect()
+    with _sql_conf(spark, BROADCAST_CONF, "-1"):
+        stats = {}
+        out = dup_clusters(pairs, stats=stats)
+        rows = out.collect()
     assert len(rows) == n
     assert all(r.cluster_id == 0 and r.cluster_size == n for r in rows)
     assert sum(r.is_keeper for r in rows) == 1
@@ -541,28 +581,18 @@ def test_repetition_signals_flags_looping_text(spark):
         assert out[d].top_2gram_share == 0.0 and not out[d].repetitive
 
 
-def test_dup_clusters_matches_union_find_property(spark):
+@pytest.mark.parametrize(
+    "broadcast", ["20m", "-1"], ids=["driver_finish", "distributed"]
+)
+def test_dup_clusters_matches_union_find_property(spark, broadcast):
     """Property: for arbitrary edge lists, dup_clusters' labeling equals a
-    driver-side union-find (min id per component) over the same edges."""
+    driver-side union-find (min id per component) over the same edges —
+    both when the TINY edge set finishes on the driver and when broadcast
+    is off and the large-star/small-star loop runs to its fixpoint."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
     from asakusafw_spark_spark.functions import dup_clusters
-
-    def union_find_labels(edges, nodes):
-        parent = {n: n for n in nodes}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        return {n: find(n) for n in nodes}
 
     edge_lists = st.lists(
         st.tuples(st.integers(0, 30), st.integers(0, 30)).filter(lambda e: e[0] != e[1]),
@@ -578,15 +608,74 @@ def test_dup_clusters_matches_union_find_property(spark):
     @given(edge_lists)
     def check(raw):
         edges = [(min(a, b), max(a, b)) for a, b in raw]
-        nodes = sorted({n for e in edges for n in e})
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+        stats = {}
         got = {
             r.id: r.cluster_id
-            for r in dup_clusters(pairs, max_rounds=40).collect()
+            for r in dup_clusters(pairs, max_rounds=40, stats=stats).collect()
         }
-        assert got == union_find_labels(edges, nodes)
+        assert got == _union_find_labels(edges)
+        assert stats["driver_finish"] == (broadcast != "-1")
 
-    check()
+    with _sql_conf(spark, BROADCAST_CONF, broadcast):
+        check()
+
+
+def test_min_id_components_matches_union_find():
+    """The driver finish's numpy kernel against a union-find reference:
+    random multigraphs, plus a 5k-link path with shuffled ids (many
+    hooking passes) and ids near the int64 limits."""
+    import random
+
+    import numpy as np
+
+    from asakusafw_spark_spark.functions.dedup import _min_id_components
+
+    rng = random.Random(7)
+    cases = []
+    for _ in range(50):
+        n = rng.randint(2, 80)
+        cases.append([(rng.randrange(n), rng.randrange(n)) for _ in range(rng.randint(1, 120))])
+    ids = list(range(5000))
+    rng.shuffle(ids)
+    cases.append(list(zip(ids, ids[1:])))
+    big = 2**63 - 1
+    cases.append([(big, -big), (-big, 3), (big - 1, big - 2)])
+    for edges in cases:
+        src = np.array([a for a, _ in edges], dtype="int64")
+        dst = np.array([b for _, b in edges], dtype="int64")
+        got_ids, labels = _min_id_components(src, dst)
+        assert dict(zip(got_ids.tolist(), labels.tolist())) == _union_find_labels(edges)
+
+
+def test_dup_clusters_hands_off_to_driver_mid_loop(spark):
+    """K60 (1770 edges, ~28 KB) is over a 2 KiB TINY bound, so one
+    distributed round runs; it leaves the 59-edge star on the minimum,
+    which is under the bound and finishes on the driver."""
+    from itertools import combinations
+
+    from asakusafw_spark_spark.functions import dup_clusters
+
+    edges = list(combinations(range(100, 160), 2))
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    with _sql_conf(spark, BROADCAST_CONF, "2k"):
+        stats = {}
+        rows = dup_clusters(pairs, stats=stats).collect()
+    assert stats == {"rounds": 1, "driver_finish": True}
+    assert {r.id: r.cluster_id for r in rows} == _union_find_labels(edges)
+    assert all(r.cluster_size == 60 for r in rows)
+    assert [r.id for r in rows if r.is_keeper] == [100]
+
+
+def test_estimated_scan_splits_reads_unit_suffixed_max_partition_bytes(spark, tmp_path):
+    """``maxPartitionBytes`` with a unit suffix ("64m") is read as bytes:
+    one small parquet file is one split, not thousands."""
+    from asakusafw_spark_spark.functions.dedup import _estimated_scan_splits
+
+    path = str(tmp_path / "small.parquet")
+    spark.range(1000).coalesce(1).write.parquet(path)
+    with _sql_conf(spark, "spark.sql.files.maxPartitionBytes", "64m"):
+        assert _estimated_scan_splits(spark.read.parquet(path)) == 1
 
 
 def test_dedup_corpus_keeps_one_per_cluster(spark):
