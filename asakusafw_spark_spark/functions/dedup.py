@@ -393,6 +393,103 @@ def dedup_exact(
     )
 
 
+def _band_rows(index: DataFrame, k: int, bands: int) -> DataFrame:
+    """Slim (id, band, key) rows projected from a signature index.
+
+    Token-less docs (no shingles) are excluded: their all-null sig
+    would concat_ws-collapse to one shared "" band key, pairing every
+    empty doc with every other (see :func:`word_shingles`; the oracle's
+    null band keys never equi-join — r13 null-injected sweep).
+    """
+    r = k // bands
+    keys = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.concat_ws(":", *[F.col("sig")[b * r + i] for i in range(r)]).alias("key"),
+        )
+        for b in range(bands)
+    ]
+    return (
+        index.where(F.size("shingles") > 0)
+        .select("id", F.explode(F.array(*keys)).alias("bk"))
+        .select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    )
+
+
+def _lsh_candidates(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    k: int,
+    bands: int,
+    seed: int,
+    max_bucket: "int | None",
+    family: str,
+) -> "tuple[DataFrame, DataFrame]":
+    """MinHash-LSH self-dedup candidates: ``(base, cand)``.
+
+    ``base`` is the persisted SLIM ``(id, shingles)`` frame: the persist
+    (CHECKPOINT-on-fanout, SURVEY §2.1) saves a re-tokenize per consumer,
+    and texts are never cached (r14: multi-KB texts riding it dominated
+    the sf1 edit-distance run).  ``cand`` is the deduped ``(id_a, id_b)``
+    list, id_a < id_b, from :func:`_band_rows`: capped, one width-pinned
+    bucket exchange (:func:`_capped_bucket_arrays`, r17), the in-task
+    pair explode and a pair dedup on a second width-pinned hash exchange
+    the aggregate reuses; for ``max_bucket=None``, the exact quadratic
+    (band, key) self-join.  ``family`` labels the cap observation.
+
+    Width guard (r14, SCALING.md round 14): both shapes end on a user
+    repartition to :func:`_verify_width`.  AQE coalesces the slim
+    id-pair shuffle by BYTES (95k pairs at sf1 fit one partition) and
+    the verify joins inherit that width, serializing the verify onto 1-2
+    cores: 19.5 vs 9.3 s for the array_intersect verify, 78 of 89 s for
+    the levenshtein one at sf1.  A user repartition is exempt from AQE
+    coalescing, and the id-pair shuffle it adds is cheap at any scale.
+    """
+    if k % bands != 0:
+        raise ValueError("bands must divide k")
+    if max_bucket is not None and max_bucket < 2:
+        raise ValueError("max_bucket must be >= 2 (or None)")
+    width = _verify_width(df)
+    base = ensure_parallelism(df).select(
+        F.col(id_col).alias("id"), word_shingles(text_col, n).alias("shingles")
+    ).transform(_persist)
+    sig = minhash_signature(F.col("shingles"), k, seed)
+    banded = _band_rows(base.withColumn("sig", sig), k, bands)
+    if max_bucket is not None:
+        bkt = _capped_bucket_arrays(
+            banded, ["band", "key"], family, max_bucket, width,
+            F.collect_list("id"),
+        )
+        cand = (
+            bkt.select(F.explode(_bucket_pairs(F.col("__ids__"))).alias("__p__"))
+            .select(
+                F.least("__p__.a", "__p__.b").alias("id_a"),
+                F.greatest("__p__.a", "__p__.b").alias("id_b"),
+            )
+            .filter(F.col("id_a") < F.col("id_b"))
+            .repartition(width, "id_a", "id_b")
+            .dropDuplicates(["id_a", "id_b"])
+        )
+    else:
+        a, b = banded.alias("a"), banded.alias("b")
+        cand = (
+            a.join(
+                b,
+                on=[
+                    F.col("a.band") == F.col("b.band"),
+                    F.col("a.key") == F.col("b.key"),
+                ],
+            )
+            .filter(F.col("a.id") < F.col("b.id"))
+            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+            .dropDuplicates(["id_a", "id_b"])
+            .repartition(width)
+        )
+    return base, cand
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -411,11 +508,11 @@ def minhash_lsh_pairs(
     Output: (id_a, id_b, jaccard) with id_a < id_b.  Jaccard is a ratio
     of integer set sizes (exact, order-free).
 
-    Scale: the band-bucket self-join ships only slim ``(id, band, key)``
-    rows — shingle arrays do NOT ride the candidate shuffle; they are
-    re-joined only onto the (much smaller) deduped candidate-pair list
-    for exact verification.  No cross join anywhere; skewed buckets are
-    split by AQE.
+    Scale: candidate generation (:func:`_lsh_candidates`) ships only
+    slim ``(id, band, key)`` rows — shingle arrays do NOT ride the
+    candidate shuffle; they are re-joined only onto the (much smaller)
+    deduped candidate-pair list for exact verification, on a width pin
+    that keeps the verify stage wide.  No cross join anywhere.
 
     ``max_bucket`` (ON by default — the analog of
     :func:`ngram_jaccard_pairs`' doc-freq cap): a (band, key) bucket
@@ -430,97 +527,9 @@ def minhash_lsh_pairs(
     documented approximation.  ``max_bucket=None`` restores the exact
     quadratic behavior.
     """
-    if k % bands != 0:
-        raise ValueError("bands must divide k")
-    if max_bucket is not None and max_bucket < 2:
-        raise ValueError("max_bucket must be >= 2 (or None)")
-    r = k // bands
-    df = ensure_parallelism(df)
-    # The shingle set feeds THREE consumers (signature + both sides of
-    # the candidate verify join); without a materialization Spark
-    # re-tokenizes and re-hashes the corpus once per consumer.  persist
-    # = the reference's CHECKPOINT-on-fanout policy (SURVEY §2.1);
-    # MEMORY_AND_DISK spills at 100 TB rather than OOMing, and Spark's
-    # cache manager dedupes identical plans across calls.
-    base = df.select(
-        F.col(id_col).alias("id"),
-        word_shingles(text_col, n).alias("shingles"),
-    ).transform(_persist)
-    # token-less docs (null/empty text) have NO shingles and must not
-    # band: their all-null signature would collapse through concat_ws's
-    # null-skipping into one shared "" band key — every empty doc
-    # pairing with every other (quadratic mega-bucket, 0/0 jaccard).
-    # The oracle's null band keys never equi-join, so this also aligns
-    # the engines (r13 null-injected sweep).
-    sig = base.where(F.size("shingles") > 0).withColumn(
-        "sig", minhash_signature(F.col("shingles"), k, seed)
+    base, cand = _lsh_candidates(
+        df, id_col, text_col, n, k, bands, seed, max_bucket, "minhash_lsh"
     )
-
-    banded = sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            ":", *[F.col("sig")[b * r + i] for i in range(r)]
-                        ).alias("key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-
-    if max_bucket is not None:
-        # r17 (guide §2.4): capped candidate generation in ONE
-        # width-pinned exchange — see _capped_bucket_arrays.  The pair
-        # dedup rides a SECOND width-pinned hash exchange on
-        # (id_a, id_b): pinning the width here (instead of the old
-        # dropDuplicates + round-robin repartition pair) both keeps the
-        # verify stage wide (r14, SCALING.md round 14: AQE coalesces
-        # the slim id-pair shuffle by BYTES and the array_intersect
-        # verify inherited 1-2 partitions — sf1 probe 19.5 vs 9.3 s)
-        # and removes one exchange (the aggregate reuses the pinned
-        # partitioning).
-        width = _verify_width(df)
-        bkt = _capped_bucket_arrays(
-            banded, ["band", "key"], "minhash_lsh", max_bucket, width,
-            F.collect_list("id"),
-        )
-        cand = (
-            bkt.select(F.explode(_bucket_pairs(F.col("__ids__"))).alias("__p__"))
-            .select(
-                F.least("__p__.a", "__p__.b").alias("id_a"),
-                F.greatest("__p__.a", "__p__.b").alias("id_b"),
-            )
-            .filter(F.col("id_a") < F.col("id_b"))
-            .repartition(width, "id_a", "id_b")
-            .dropDuplicates(["id_a", "id_b"])
-        )
-    else:
-        a = banded.alias("a")
-        b = banded.alias("b")
-        # explicit post-dedup width (r14, SCALING.md round 14): AQE
-        # coalesces the slim id-pair shuffle by BYTES and the verify
-        # joins inherit that width, serializing the array_intersect
-        # verify — the sf1 coalesce-off probe measured this query 19.5
-        # vs 9.3 s.  A user repartition is AQE-exempt; the extra
-        # id-pair shuffle is trivially cheap at every scale.
-        cand = (
-            a.join(
-                b,
-                on=[
-                    F.col("a.band") == F.col("b.band"),
-                    F.col("a.key") == F.col("b.key"),
-                ],
-            )
-            .filter(F.col("a.id") < F.col("b.id"))
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
-            .repartition(_verify_width(df))
-        )
     verified = cand.join(
         base.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a")), "id_a"
     ).join(
@@ -1369,32 +1378,6 @@ def build_dedup_index(
     return base.withColumn("sig", minhash_signature(F.col("shingles"), k, seed))
 
 
-def _band_rows(index: DataFrame, k: int, bands: int) -> DataFrame:
-    """Slim (id, band, key) rows projected from a signature index.
-
-    Token-less docs (no shingles) are excluded — see minhash_lsh_pairs:
-    their all-null sig would concat_ws-collapse to one shared band key.
-    """
-    r = k // bands
-    index = index.where(F.size("shingles") > 0)
-    return index.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            ":", *[F.col("sig")[b * r + i] for i in range(r)]
-                        ).alias("key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-
-
 def band_bucket_counts(index: DataFrame, k: int = 8, bands: int = 4) -> DataFrame:
     """Per-(band, key) document counts of a :func:`build_dedup_index`
     frame: ``(band, key, __n__)``.
@@ -1460,6 +1443,8 @@ def dedup_against_corpus(
         raise ValueError("pass exactly one of corpus= or index=")
     if k % bands != 0:
         raise ValueError("bands must divide k")
+    if max_bucket is not None and max_bucket < 2:
+        raise ValueError("max_bucket must be >= 2 (or None)")
     if bucket_counts is not None:
         # The counts frame is trusted to describe THIS index at THIS
         # (k, bands, seed): a frame built with different parameters or
@@ -1492,8 +1477,6 @@ def dedup_against_corpus(
     hist_rows = _band_rows(index, k, bands)
     new_rows = _band_rows(new_index, k, bands)
     if max_bucket is not None:
-        if max_bucket < 2:
-            raise ValueError("max_bucket must be >= 2 (or None)")
         # HISTORY-ONLY bucket counts.  Counting the batch's own rows
         # into the cap made each doc's admission depend on what else
         # happened to arrive in the same micro-batch — the r09 sf1
@@ -1517,8 +1500,7 @@ def dedup_against_corpus(
         # against each matching batch row reproduces the old join's
         # fan-out exactly (<= max_bucket candidates per batch band
         # row).  The width pin on the (old_id, new_id) dedup exchange
-        # keeps the array_intersect verify wide (SCALING.md round 14;
-        # sf1 coalesce-off probe: 10.7 vs 7.8 s).
+        # is _lsh_candidates' width guard (sf1 probe: 10.7 vs 7.8 s).
         width = _verify_width(new_docs)
         if bucket_counts is None:
             hist_bkt = _capped_bucket_arrays(
@@ -1555,10 +1537,7 @@ def dedup_against_corpus(
             )
             .select(F.col("a.id").alias("old_id"), F.col("b.id").alias("new_id"))
             .dropDuplicates(["old_id", "new_id"])
-            # AQE-exempt width for the array_intersect verify below —
-            # the slim pair shuffle otherwise coalesces narrow
-            # (SCALING.md round 14; sf1 coalesce-off probe: 10.7 vs
-            # 7.8 s)
+            # _lsh_candidates' width guard for the verify below
             .repartition(_verify_width(new_docs))
         )
     verified = cand.join(
@@ -1600,101 +1579,20 @@ def edit_distance_pairs(
     pipelines reach for when near-dup candidates need an exact
     byte-drift bound (OCR variants, template fills, boilerplate
     patches).  All-pairs Levenshtein is quadratic and unshippable —
-    candidates come from the same capped band join as MinHash, so only
-    plausibly-similar pairs pay the O(len²) verify, JVM-side.
+    candidates come from :func:`_lsh_candidates` (MinHash's capped band
+    join and width pin), so only plausibly-similar pairs pay the O(len²)
+    verify, JVM-side, against a pruned re-scan of the source: the tiny
+    candidate list is broadcast, so texts never cross a shuffle.
 
     Cross-engine note: Spark's levenshtein counts CHARACTERS, DuckDB's
     counts BYTES — identical on ASCII text (the oracle corpus), off by
     the UTF-8 continuation count on non-ASCII; the oracle contract
     pins the ASCII case.
     """
-    if k % bands != 0:
-        raise ValueError("bands must divide k")
-    if max_bucket is not None and max_bucket < 2:
-        raise ValueError("max_bucket must be >= 2 (or None)")
-    r = k // bands
-    # SLIM persisted base (r14): only (id, shingles) is cached — the
-    # multi-KB texts used to ride the persist and then shuffle through
-    # both verify joins, dominating the sf1 Spark side (candidate
-    # generation+text movement ~135 s of 146; the thresholded-DP verify
-    # itself is ~8 s).  Verify instead joins a pruned re-scan of the
-    # source: the deduped candidate list is tiny (95k id pairs at sf1),
-    # so Catalyst broadcasts it against the two text scans and no text
-    # bytes cross a shuffle at all.
-    base = (
-        ensure_parallelism(df)
-        .select(
-            F.col(id_col).alias("id"),
-            word_shingles(text_col, n).alias("shingles"),
-        )
-        .transform(_persist)
+    _, cand = _lsh_candidates(
+        df, id_col, text_col, n, k, bands, seed, max_bucket, "edit_distance"
     )
     texts = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("txt"))
-    # exclude token-less docs from banding — see minhash_lsh_pairs
-    sig = base.where(F.size("shingles") > 0).withColumn(
-        "sig", minhash_signature(F.col("shingles"), k, seed)
-    )
-    banded = sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            ":", *[F.col("sig")[b * r + i] for i in range(r)]
-                        ).alias("key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    if max_bucket is not None:
-        # r17 (guide §2.4): same one-exchange capped candidate shape as
-        # minhash_lsh_pairs — see _capped_bucket_arrays.  The width pin
-        # on the (id_a, id_b) dedup exchange keeps the levenshtein DP
-        # verify wide (r14: the slim id-pair shuffle otherwise
-        # coalesces by bytes and the broadcast text joins inherit 1-2
-        # partitions — 78 of the row's 89 s at sf1).
-        width = _verify_width(df)
-        bkt = _capped_bucket_arrays(
-            banded, ["band", "key"], "edit_distance", max_bucket, width,
-            F.collect_list("id"),
-        )
-        cand = (
-            bkt.select(F.explode(_bucket_pairs(F.col("__ids__"))).alias("__p__"))
-            .select(
-                F.least("__p__.a", "__p__.b").alias("id_a"),
-                F.greatest("__p__.a", "__p__.b").alias("id_b"),
-            )
-            .filter(F.col("id_a") < F.col("id_b"))
-            .repartition(width, "id_a", "id_b")
-            .dropDuplicates(["id_a", "id_b"])
-        )
-    else:
-        a, b = banded.alias("a"), banded.alias("b")
-        # explicit post-dedup width (r14): AQE coalesces this shuffle by
-        # BYTES — 95k slim id pairs at sf1 fit one partition — and the
-        # broadcast text joins below inherit that width, serializing
-        # every levenshtein DP onto one core (measured 78 of the row's
-        # 89 s: the 4th manifestation of the r13 narrow-stage-
-        # inheritance class).  A user repartition is exempt from AQE
-        # coalescing; the id-pair shuffle it adds is trivially cheap at
-        # every scale.
-        cand = (
-            a.join(
-                b,
-                on=[
-                    F.col("a.band") == F.col("b.band"),
-                    F.col("a.key") == F.col("b.key"),
-                ],
-            )
-            .filter(F.col("a.id") < F.col("b.id"))
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
-            .repartition(_verify_width(df))
-        )
     verified = cand.join(
         texts.select(F.col("id").alias("id_a"), F.col("txt").alias("t_a")), "id_a"
     ).join(

@@ -73,13 +73,7 @@ def engine_builder(
         # dedup family, CC loop) otherwise runs its post-cache stages at
         # the static partition count — measured 25% off
         # iterative_transactional_output (1.86→1.24 s interleaved, r16)
-        # (env-toggleable so the A/B ordered by the r16 verdict — conf
-        # ON/OFF over the _persist family at 32 cores — runs the SAME
-        # tree in both arms; default stays true)
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            os.environ.get("SPARK_GRAFT_CACHED_REPARTITION", "true"),
-        )
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )

@@ -1609,13 +1609,21 @@ def test_dedup_against_corpus_batch_slicing_invariant(spark):
     assert whole and whole != {d for d, _ in batch_docs}
 
 
-def test_minhash_cap_generous_equals_exact(spark):
+@pytest.mark.parametrize(
+    "generator, verify_col",
+    [("minhash_lsh_pairs", "jaccard"), ("edit_distance_pairs", "edit_distance")],
+    ids=["minhash_lsh_pairs", "edit_distance_pairs"],
+)
+def test_minhash_cap_generous_equals_exact(spark, generator, verify_col):
     """A cap larger than every bucket must be output-identical to
     max_bucket=None — pins that the keep-filter's singleton-bucket prune
     (``__n__ >= 2``) is semantics-free: a bucket with one member can
-    never produce a candidate pair."""
-    from asakusafw_spark_spark.functions import minhash_lsh_pairs
+    never produce a candidate pair.  Both generators share the candidate
+    kernel, so each checks its capped path against its exact one."""
+    from asakusafw_spark_spark.functions import dedup
 
+    gen = getattr(dedup, generator)
+    kwargs = {"threshold": 0.3} if generator == "minhash_lsh_pairs" else {}
     words = ["red", "blue", "green", "cat", "dog", "sun", "moon", "tree"]
     docs = [
         (i, " ".join(words[(i + j) % len(words)] for j in range(6)))
@@ -1627,12 +1635,12 @@ def test_minhash_cap_generous_equals_exact(spark):
     df = spark.createDataFrame(docs, ["doc_id", "text"])
 
     capped = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in minhash_lsh_pairs(df, threshold=0.3, max_bucket=10_000).collect()
+        (r.id_a, r.id_b, r[verify_col])
+        for r in gen(df, max_bucket=10_000, **kwargs).collect()
     }
     exact = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in minhash_lsh_pairs(df, threshold=0.3, max_bucket=None).collect()
+        (r.id_a, r.id_b, r[verify_col])
+        for r in gen(df, max_bucket=None, **kwargs).collect()
     }
     assert capped == exact and capped  # identical and non-trivial
 
@@ -1829,3 +1837,22 @@ def test_dedup_against_corpus_bucket_counts_validation(spark):
     # the real frame passes and gives the same survivors
     kept = dedup_against_corpus(batch, index=idx, bucket_counts=counts)
     assert [r.doc_id for r in kept.collect()] == [1]
+
+
+def test_dedup_against_corpus_bad_args_persist_nothing(spark):
+    """Argument errors must raise BEFORE the history and batch indexes
+    are persisted: a raise after ``_persist`` leaves cache entries that
+    no caller holds a frame to release."""
+    from asakusafw_spark_spark.functions import dedup
+
+    df = spark.createDataFrame(
+        [(0, "alpha beta gamma delta"), (1, "alpha beta gamma epsilon")],
+        "doc_id long, text string",
+    )
+    live = len(dedup._LIVE_INTERMEDIATES)
+    with pytest.raises(ValueError, match="max_bucket must be >= 2"):
+        dedup.dedup_against_corpus(df, corpus=df, max_bucket=1)
+    assert len(dedup._LIVE_INTERMEDIATES) == live
+    with pytest.raises(ValueError, match="bands must divide k"):
+        dedup.dedup_against_corpus(df, corpus=df, bands=3)
+    assert len(dedup._LIVE_INTERMEDIATES) == live

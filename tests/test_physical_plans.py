@@ -2,6 +2,7 @@
 physical operators they promise (SURVEY.md §2.4 Shuffled*/Broadcast*
 compiler twins), and projections must prune the scan."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from asakusafw_spark_spark.operators import master_join, project
@@ -463,26 +464,40 @@ def test_fold_partial_prefold_gating(spark):
     assert plan_p.count("MapInPandas") == plan_o.count("MapInPandas") + 1
 
 
-def test_edit_distance_verify_stage_is_wide(spark, sf_dir):
+@pytest.mark.parametrize(
+    "generator, verify",
+    [("edit_distance_pairs", "levenshtein"), ("minhash_lsh_pairs", "array_intersect")],
+    ids=["edit_distance_pairs", "minhash_lsh_pairs"],
+)
+def test_edit_distance_verify_stage_is_wide(spark, sf_dir, generator, verify):
     """Round-14 regression pin (SCALING.md round 14): AQE coalesces the
     ~MB-scale candidate id-pair shuffle to one partition by BYTES, and
-    the broadcast text joins preserve the stream side's width — every
-    levenshtein DP then runs on one core (78 of 89 s at sf1).  The
-    explicit AQE-exempt repartition above the candidate dedup must stay
-    in the optimized plan, between the dedup aggregate and the verify."""
-    from asakusafw_spark_spark.functions.dedup import edit_distance_pairs
+    the verify joins preserve the stream side's width — every verify
+    (levenshtein DP, array_intersect Jaccard) then runs on one core (78
+    of 89 s at sf1 for levenshtein).  The explicit AQE-exempt
+    repartition above the candidate dedup must stay in the optimized
+    plan, between the dedup aggregate and the verify, for BOTH callers
+    of the shared candidate kernel."""
+    from asakusafw_spark_spark.functions import dedup
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = edit_distance_pairs(docs, max_distance=20)
+    out = getattr(dedup, generator)(docs)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "Repartition" in plan, (
         "candidate repartition lost — verify stage will inherit AQE's "
         "bytes-coalesced width:\n" + plan[:2000]
     )
-    # and the levenshtein must sit ABOVE the repartition in the tree
-    lev = plan.find("levenshtein")
+    # and the verify must sit ABOVE the repartition in the tree
+    ver = plan.find(verify)
     rep = plan.find("Repartition")
-    assert lev != -1 and lev < rep, "levenshtein below the width guard"
+    assert ver != -1 and ver < rep, f"{verify} below the width guard"
+    # the pin must wrap the (id_a, id_b) dedup itself: the capped path's
+    # bucket repartition alone would satisfy both checks above
+    lines = plan.splitlines()
+    agg = next(i for i, line in enumerate(lines) if "Aggregate [id_a#" in line)
+    assert any(
+        "Repartition" in line for line in (lines[agg - 1], lines[agg + 1])
+    ), "no width pin next to the candidate dedup:\n" + plan[:2000]
 
 
 def test_ansi_rollup_keeps_single_expand_plan(spark, sf_dir):
