@@ -24,6 +24,7 @@ from collections.abc import Callable, Sequence
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
@@ -177,9 +178,16 @@ class FlowGraph:
                 s = self._sinks[0]
                 s.action(frames[s.input])
                 return
+            # pool threads start with empty JVM local properties: the
+            # wrapper carries the caller's job group (cancelJobGroup,
+            # per-group accounting) and scheduler pool over to each sink
             with ThreadPoolExecutor(max_workers=max_concurrent_sinks) as pool:
                 futures = [
-                    pool.submit(s.action, frames[s.input]) for s in self._sinks
+                    pool.submit(
+                        inheritable_thread_target(spark)(s.action),
+                        frames[s.input],
+                    )
+                    for s in self._sinks
                 ]
                 for f in futures:
                     f.result()  # propagate failures

@@ -38,13 +38,25 @@ Three reference compositions ride on top:
   ``stop()``, ``awaitExecution()``, listener events):
   :class:`IterativeBatchExecutor` runs rounds on a background thread
   with submit/stop/await and a per-round progress callback.
+  Where the engine owns a round's actions — the staged writes of
+  :meth:`IterativeRunner.run_transactional` — it overlaps them as the
+  reference's ``Job.execute`` overlaps node futures: frames are still
+  built in round order on the caller's thread, up to
+  ``defaultParallelism`` rounds stage concurrently, ``on_round`` fires
+  in round order, and a failure or stop drains every in-flight write
+  before it propagates.  :meth:`IterativeRunner.run` and the executor
+  run a caller-supplied ``collect``, so they go one round at a time.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Mapping, Sequence
+from collections import deque
+from collections.abc import Callable, Iterator, Mapping, Sequence
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
@@ -172,7 +184,8 @@ class IterativeRunner:
     def request_stop(self) -> None:
         """Graceful stop: the in-flight round completes (its ``collect``
         runs), remaining rounds are skipped and :meth:`run` raises
-        :class:`StopRequested`."""
+        :class:`StopRequested`.  Under :meth:`run_transactional` every
+        round already staging finishes first, and nothing commits."""
         self._stop_requested = True
 
     def _effective_keys(self) -> dict[str, tuple[str, ...]]:
@@ -209,16 +222,25 @@ class IterativeRunner:
         ``IterativeBatchExecutor`` listener ``onRoundCompleted``).  A
         :meth:`request_stop` between rounds skips the remainder and
         raises :class:`StopRequested` (caches/broadcasts still release).
+        Rounds run one at a time: the engine does not own ``collect``'s
+        actions, so it cannot overlap them.
         """
+        with self._run_caches() as (cache, view_cache):
+            self._execute(
+                spark, rounds, collect, on_round, cache, view_cache
+            )
+
+    @contextmanager
+    def _run_caches(self):
+        """Fresh per-run state: node/view caches (released on exit, on
+        success or failure), build counters and the stop flag."""
         self._stop_requested = False
         cache: dict[tuple, DataFrame] = {}
         view_cache: dict[tuple, object] = {}
         self.build_counts = {}
         self.view_build_counts = {}
         try:
-            self._execute(
-                spark, rounds, collect, on_round, cache, view_cache
-            )
+            yield cache, view_cache
         finally:
             self._release(cache, view_cache)
 
@@ -244,6 +266,25 @@ class IterativeRunner:
         :class:`IterativeBatchExecutor` keeps NEVER/PARAMETER nodes and
         parameter-keyed broadcasts warm across separately-submitted
         rounds (the whole point of the recompute kinds)."""
+        for ridx, params, frames in self._frames(
+            spark, rounds, cache, view_cache, start_idx
+        ):
+            collect(ridx, params, frames)
+            if on_round is not None:
+                on_round(ridx, params)
+
+    def _frames(
+        self,
+        spark: SparkSession,
+        rounds: Sequence[Mapping],
+        cache: dict,
+        view_cache: dict,
+        start_idx: int = 0,
+    ) -> Iterator[tuple[int, Mapping, dict[str, DataFrame]]]:
+        """Yield ``(round_idx, params, frames)`` per round, building and
+        memoising every node on the caller's thread, in round order.
+        The stop flag is checked before each round is built, i.e. after
+        the consumer has finished with the previous one."""
         eff = self._effective_keys()
         views_by_name = {v.name: v for v in self.views}
         build_counts = self.build_counts
@@ -259,7 +300,9 @@ class IterativeRunner:
                 if v.max_entries is not None:
                     # LRU eviction: dict preserves insertion order and
                     # hits below re-insert, so the FIRST same-view key
-                    # is the least recently used
+                    # is the least recently used.  unpersist only drops
+                    # executor copies: a round still in flight with the
+                    # evicted broadcast re-fetches it from the driver
                     live = [k for k in view_cache if k[0] == name]
                     while len(live) >= v.max_entries:
                         view_cache.pop(live.pop(0)).unpersist()
@@ -296,9 +339,7 @@ class IterativeRunner:
                         build_counts[n.name] = build_counts.get(n.name, 0) + 1
                     df = cache[key]
                 frames[n.name] = df
-            collect(ridx, params, frames)
-            if on_round is not None:
-                on_round(ridx, params)
+            yield ridx, params, frames
 
     def run_transactional(
         self,
@@ -331,8 +372,17 @@ class IterativeRunner:
            ``_``-prefixed, invisible to Spark/Hadoop readers, and swept
            by the rerun).
 
-        An optional ``collect`` still fires per round for side outputs.
-        Returns the committed :class:`TransactionalOutput`.
+        Rounds stage CONCURRENTLY, up to ``defaultParallelism`` in
+        flight (the reference fires every output as a future,
+        ``Job.scala``): frames are built and memoised, and dataset
+        names reserved, in round order on the caller's thread; only the
+        staged writes run on a thread pool.  ``collect`` (optional, for
+        side outputs) and ``on_round`` fire in round order on the
+        caller's thread, each after that round's staging has completed.
+        On any error or :meth:`request_stop` no further round starts,
+        and every in-flight write is drained before the exception
+        propagates — before caches are released, and with nothing
+        committed.  Returns the committed :class:`TransactionalOutput`.
         """
         from ..sources.write import TransactionalOutput
 
@@ -342,21 +392,65 @@ class IterativeRunner:
         if sweep_orphans:
             tx.sweep_orphans()
         tx.setup()
+        width = max(1, spark.sparkContext.defaultParallelism)
+        # (round_idx, params, frames, staging future), oldest first
+        in_flight: deque = deque()
 
-        def stage(ridx: int, params: Mapping, frames: dict) -> None:
-            for s in self.sinks:
-                resolved = s.name_template.format(round=ridx, **params)
-                tx.prepare(
-                    resolved, frames[s.node], format=s.format, **s.options
+        def stage(writes: list) -> None:
+            for args in writes:
+                tx._write(*args)
+
+        def finish_ready(limit: int) -> None:
+            """Finish rounds oldest first while more than ``limit`` are
+            in flight or the oldest is done."""
+            # a failed write anywhere in the window stops the run: the
+            # in-order finish below reaches it and re-raises
+            failed = any(
+                f.done() and f.exception() is not None
+                for *_, f in in_flight
+            )
+            while in_flight and (
+                failed or len(in_flight) > limit or in_flight[0][3].done()
+            ):
+                if self._stop_requested:
+                    return  # the caller raises StopRequested
+                ridx, params, frames, fut = in_flight.popleft()
+                fut.result()  # re-raise the round's write failure
+                if collect is not None:
+                    collect(ridx, params, frames)
+                if on_round is not None:
+                    on_round(ridx, params)
+
+        # exit order: the pool drains every in-flight write, THEN the
+        # caches release, whether the rounds finished or raised
+        with self._run_caches() as (cache, view_cache), ThreadPoolExecutor(
+            max_workers=width
+        ) as pool:
+            for ridx, params, frames in self._frames(
+                spark, rounds, cache, view_cache
+            ):
+                writes = []
+                for s in self.sinks:
+                    name = s.name_template.format(round=ridx, **params)
+                    writes.append((
+                        name, tx._reserve(name), frames[s.node],
+                        s.format, s.options,
+                    ))
+                finish_ready(width - 1)  # wait for a free slot
+                if self._stop_requested:
+                    raise StopRequested(f"stopped before round {ridx}")
+                # wrapped per round: each target gets its own copy of
+                # the caller's JVM local properties (job group, pool)
+                fut = pool.submit(inheritable_thread_target(spark)(stage), writes)
+                in_flight.append((ridx, params, frames, fut))
+            finish_ready(0)
+            if in_flight:
+                raise StopRequested(
+                    f"stopped with {len(in_flight)} staged rounds "
+                    "uncommitted"
                 )
-            if collect is not None:
-                collect(ridx, params, frames)
-
-        try:
-            self.run(spark, rounds, stage, on_round=on_round)
-        except BaseException:
-            # leave staging for the rerun's sweep — never half-promote
-            raise
+        # reached only when every round staged: any error above leaves
+        # staging for the rerun's sweep — never half-promote
         tx.commit()
         return tx
 
@@ -368,9 +462,11 @@ class IterativeBatchExecutor:
     ``await_completion()`` and a per-round progress callback.
 
     The thread exists for QUEUE semantics (submit while running, abort
-    between rounds) — the Spark work itself is the same job-at-a-time
-    execution as :meth:`IterativeRunner.run`; this is driver-side
-    orchestration, not a parallelism claim.
+    between rounds) — the Spark work itself is the same one-round-at-a-
+    time execution as :meth:`IterativeRunner.run`, because the caller's
+    ``collect`` owns each round's actions; only
+    :meth:`IterativeRunner.run_transactional` keeps several rounds in
+    flight.  This is driver-side orchestration, not a parallelism claim.
     """
 
     def __init__(

@@ -351,6 +351,20 @@ class TransactionalOutput:
         (an iterative sink template that forgets its round variable
         would silently overwrite earlier rounds' staging and then fail
         at the second promotion — caught here instead)."""
+        if self._spark is None:
+            self._spark = df.sparkSession
+        staging = self._reserve(name)
+        try:
+            self._write(name, staging, df, format, options)
+        except BaseException:
+            self._staged.remove((staging, f"{self.base_path}/{name}"))
+            raise
+
+    def _reserve(self, name: str) -> str:
+        """The bookkeeping half of :meth:`prepare`: validate ``name``,
+        register its staging → final pair and return the staging path.
+        Cheap and driver-only, so a pipelined caller reserves names in
+        order on one thread and runs only :meth:`_write` concurrently."""
         if os.path.isabs(name) or ".." in name.split("/"):
             raise ValueError(f"prepare: dataset name escapes base: {name!r}")
         final = f"{self.base_path}/{name}"
@@ -360,14 +374,19 @@ class TransactionalOutput:
                 "transaction — per-round sink templates must embed a "
                 "round-distinct variable (e.g. 'out/round={round}')"
             )
-        if self._spark is None:
-            self._spark = df.sparkSession
         staging = f"{self.staging_root}/{name}"
+        self._staged.append((staging, final))
+        return staging
+
+    def _write(
+        self, name: str, staging: str, df: DataFrame, format: str, options: dict
+    ) -> None:
+        """The Spark half of :meth:`prepare`: write ``df`` to a staging
+        path returned by :meth:`_reserve`."""
         write_flat(
             df, staging, format=format, mode="overwrite",
             counters=self._counters, sink_name=name, **options,
         )
-        self._staged.append((staging, f"{self.base_path}/{name}"))
 
     def commit(self) -> None:
         """Promote every staged dataset, then seal the transaction.

@@ -33,6 +33,23 @@ def test_flow_end_to_end(spark, sf_dir, tmp_path):
     assert results["done"] > 0 and results["open_prios"] > 0
 
 
+def test_flow_multi_sink_keeps_caller_job_group(spark):
+    """Sinks fired from the flow's thread pool carry the caller's job
+    group, so ``cancelJobGroup`` reaches a multi-sink flow."""
+    sc = spark.sparkContext
+    group = "flow_multi_sink"
+    flow = FlowGraph()
+    flow.source("a", lambda s: s.range(20))
+    flow.sink("n", "a", lambda df: df.count())
+    flow.sink("rows", "a", lambda df: df.collect())
+    sc.setJobGroup(group, "two-sink flow")
+    try:
+        flow.run(spark)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert sc.statusTracker().getJobIdsForGroup(group)
+
+
 def test_flow_rejects_unknown_input():
     flow = FlowGraph()
     with pytest.raises(ValueError, match="unknown input"):
@@ -412,3 +429,160 @@ def test_iterative_view_max_entries_validates():
                 "v", lambda spark, params: None, key=["k"], max_entries=bad
             )
     assert r.views == []
+
+
+def _staging_listing(base):
+    """Every path under the transaction staging roots of ``base``."""
+    import os
+
+    out = []
+    for d in os.listdir(base):
+        if d.startswith("_tx_"):
+            for root, dirs, files in os.walk(os.path.join(base, d)):
+                out.extend(
+                    os.path.relpath(os.path.join(root, n), base)
+                    for n in dirs + files
+                )
+    return sorted(out)
+
+
+def test_transactional_write_failure_on_worker_thread(spark, tmp_path):
+    """Round 2's frame builds fine and fails only when its staged write
+    executes on the pool: the error propagates, nothing commits, and
+    every other in-flight write has finished by the time it does."""
+    import time
+
+    from asakusafw_spark_spark.sources.write import HadoopFs
+
+    def build(sp, p):
+        df = sp.range(10)
+        if p["r"] == 2:
+            return df.withColumn(
+                "v",
+                F.when(F.col("id") >= 0, F.raise_error(F.lit("late boom")))
+                .otherwise(F.col("id")),
+            )
+        return df.withColumn("v", F.col("id") * p["r"])
+
+    runner = IterativeRunner()
+    runner.node("out", build, param_keys=["r"])
+    runner.sink("out", "rounds/r={r}")
+    base = str(tmp_path / "tx")
+    with pytest.raises(Exception, match="late boom"):
+        runner.run_transactional(spark, [{"r": r} for r in range(6)], base)
+    fs = HadoopFs(spark, base)
+    assert not fs.exists(f"{base}/_TRANSACTION_SUCCESS")
+    assert not fs.exists(f"{base}/rounds")
+    staged = _staging_listing(base)
+    time.sleep(1)
+    assert _staging_listing(base) == staged, "a write landed after return"
+
+
+def test_transactional_more_rounds_than_slots(spark, tmp_path):
+    """10 rounds through a window of defaultParallelism (4 here):
+    progress stays in round order, the NEVER node builds once, every
+    round's dataset commits with its own rows, and every staged write
+    runs in the caller's job group."""
+    runner = IterativeRunner()
+    runner.node("base", lambda sp, p: sp.range(100))
+    runner.node(
+        "out",
+        lambda sp, p, b: b.filter(F.col("id") < (p["r"] + 1) * 5),
+        inputs=["base"],
+        param_keys=["r"],
+    )
+    runner.sink("out", "rounds/r={r}")
+    base = str(tmp_path / "tx")
+    progressed = []
+    sc = spark.sparkContext
+    group = "transactional_rounds"
+    sc.setJobGroup(group, "10 pipelined rounds")
+    try:
+        tx = runner.run_transactional(
+            spark, [{"r": r} for r in range(10)], base,
+            on_round=lambda i, p: progressed.append(i),
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 10
+    assert tx._committed
+    assert progressed == list(range(10))
+    assert runner.build_counts["base"] == 1
+    for r in range(10):
+        assert spark.read.parquet(f"{base}/rounds/r={r}").count() == (r + 1) * 5
+
+
+def test_transactional_view_eviction_with_rounds_in_flight(spark, tmp_path):
+    """max_entries=1 with alternating parameter values evicts a view
+    every round while earlier rounds may still be writing through it:
+    the in-flight round re-fetches the broadcast, output stays exact."""
+    runner = IterativeRunner()
+    runner.view(
+        "lk",
+        lambda sp, p: sp.createDataFrame(
+            [(k, k * p["m"]) for k in range(5)], "k int, scaled int"
+        ),
+        key=["k"],
+        param_keys=["m"],
+        max_entries=1,
+    )
+
+    def scaled(sp, p, lk):
+        @F.udf("int")
+        def look(k):
+            return lk.value[(k,)][0]["scaled"]
+
+        return sp.range(5).select(
+            F.col("id").cast("int").alias("k")
+        ).withColumn("scaled", look("k"))
+
+    runner.node("out", scaled, views=["lk"], param_keys=["r"])
+    runner.sink("out", "rounds/r={r}")
+    base = str(tmp_path / "tx")
+    rounds = [{"r": r, "m": 1 + r % 2} for r in range(8)]
+    runner.run_transactional(spark, rounds, base)
+    assert runner.view_build_counts == {"lk": 8}
+    for p in rounds:
+        got = {
+            row["k"]: row["scaled"]
+            for row in spark.read.parquet(f"{base}/rounds/r={p['r']}").collect()
+        }
+        assert got == {k: k * p["m"] for k in range(5)}
+
+
+def test_transactional_request_stop_drains_in_flight(spark, tmp_path):
+    """request_stop from on_round at round 1: no later progress, the
+    rounds already staging finish before StopRequested propagates, and
+    nothing is committed."""
+    import time
+
+    from asakusafw_spark_spark.plans.iterative import StopRequested
+    from asakusafw_spark_spark.sources.write import HadoopFs
+
+    runner = IterativeRunner()
+    runner.node(
+        "out",
+        lambda sp, p: sp.range(50).withColumn("v", F.col("id") * p["r"]),
+        param_keys=["r"],
+    )
+    runner.sink("out", "rounds/r={r}")
+    progressed = []
+
+    def on_round(i, p):
+        progressed.append(i)
+        if i == 1:
+            runner.request_stop()
+
+    base = str(tmp_path / "tx")
+    with pytest.raises(StopRequested):
+        runner.run_transactional(
+            spark, [{"r": r} for r in range(10)], base, on_round=on_round
+        )
+    assert progressed == [0, 1]
+    fs = HadoopFs(spark, base)
+    assert not fs.exists(f"{base}/_TRANSACTION_SUCCESS")
+    assert not fs.exists(f"{base}/rounds")
+    staged = _staging_listing(base)
+    assert not [p for p in staged if "_temporary" in p]
+    time.sleep(1)
+    assert _staging_listing(base) == staged, "a write landed after return"
