@@ -15,17 +15,72 @@ AQE replaces static partition sizing.  What we DO pin down:
 - Arrow enabled for the Pandas-UDF slow path.
 - ``autoBroadcastJoinThreshold`` = 20 MiB to honor the reference's
   "TINY" broadcast limit (PartitionGroupAnalyzer.java:68-78).
+
+Launch cost: when ``getOrCreate`` starts the driver JVM in this process
+(no gateway yet, no ``PYSPARK_GATEWAY_PORT``), the JVM starts from a
+class-data-sharing archive kept per host (see :mod:`.cds`), which
+roughly halves session start and the first job:
+
+- Location: ``$XDG_CACHE_HOME/asakusafw_spark_spark/`` (default
+  ``~/.cache/asakusafw_spark_spark/``), ~140-170 MB.
+- Key: the JDK, the name/size/mtime of every jar in ``$SPARK_HOME/jars``
+  and the extra classpath; a change starts a new archive and prunes the
+  old one.
+- Cost: the first launch for a key runs slower (the JVM records every
+  class it loads) and dumps the archive when the interpreter exits
+  (~10-16 s, after the work is done); later launches map it.
+- Conf: the conf dir must hold only ``*.template`` files (then an empty
+  dir is used instead); any real file there keeps the normal start.
+- Opt out: ``-Xshare:off`` in ``spark.driver.extraJavaOptions`` (or
+  ``spark.driver.defaultJavaOptions``).
+
+One INFO line on the ``asakusafw_spark_spark.session`` logger per launch
+says whether the archive was mapped, is being dumped, or is off and why.
 """
 
 from __future__ import annotations
 
+import atexit
+import logging
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+from . import cds
+
+_LOG = logging.getLogger("asakusafw_spark_spark.session")
 
 #: Reference "TINY" broadcast size limit, 20 MiB
 #: (planner/.../PartitionGroupAnalyzer.java:68-78).
 TINY_BROADCAST_BYTES = 20 * 1024 * 1024
+
+
+class _EngineBuilder(SparkSession.Builder):
+    """A builder whose ``getOrCreate`` launches the driver JVM through
+    the class-data-sharing archive when it launches one at all."""
+
+    def getOrCreate(self) -> SparkSession:
+        with self._lock:
+            plan = cds.plan_launch(self._options, gateway=SparkContext._gateway)
+            if plan is not None:
+                _LOG.info(plan.describe())
+            if plan is None or plan.mode == "off":
+                return super().getOrCreate()
+            self._options[cds.DEFAULT_OPTS] = plan.java_options
+            saved = os.environ.get("SPARK_CONF_DIR")
+            os.environ["SPARK_CONF_DIR"] = plan.conf_dir
+            try:
+                spark = super().getOrCreate()
+            finally:
+                if saved is None:
+                    del os.environ["SPARK_CONF_DIR"]
+                else:
+                    os.environ["SPARK_CONF_DIR"] = saved
+            proc = getattr(SparkContext._gateway, "proc", None)
+            if plan.mode == "dump" and proc is not None:
+                atexit.register(cds.finish_dump, plan, proc)
+            return spark
 
 
 def engine_builder(
@@ -50,7 +105,7 @@ def engine_builder(
             shuffle_partitions = max(os.cpu_count() or 8, 8)
 
     b = (
-        SparkSession.builder.appName(app_name)
+        _EngineBuilder().appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")

@@ -283,10 +283,13 @@ class TransactionalOutput:
 
     Spark's committer makes each single dataset atomic; CROSS-dataset
     atomicity needs an engine-level protocol: every dataset stages under
-    ``<base>/_tx_<id>/<name>``, and :meth:`commit` promotes all stages
-    then writes a ``_TRANSACTION_SUCCESS`` marker.  Readers treat the
-    marker as the validity gate, so a crash mid-promotion is detectable
-    (marker absent) and re-runnable (promotion is idempotent moves).
+    ``<base>/_tx_<id>/<name>``, and :meth:`commit` retracts any earlier
+    transaction's ``_TRANSACTION_SUCCESS`` marker, promotes all stages,
+    then writes its own marker.  Readers treat the marker as the
+    validity gate, so a crash mid-promotion is detectable (marker
+    absent) and re-runnable (promotion is idempotent moves).  The
+    earlier transaction's datasets are replaced, not parked: after a
+    failed recommit the base holds no valid state until a rerun.
     """
 
     def __init__(
@@ -395,11 +398,15 @@ class TransactionalOutput:
         dataset) with disjoint paths, so — like the grouped-output
         promotion pass above — they run through a thread pool: a
         10k-dataset iterative transaction commits at RPC-concurrency
-        speed instead of serially.  The success marker still strictly
+        speed instead of serially.  An earlier transaction's marker is
+        deleted BEFORE the first promotion and the new one strictly
         FOLLOWS every promotion (pool join), preserving the two-phase
-        contract: a crash mid-promotion leaves no marker, and re-running
-        the job re-stages and re-promotes idempotently."""
+        contract: a crash mid-promotion leaves no marker (not a stale
+        one over a torn mix), and re-running the job re-stages and
+        re-promotes idempotently."""
         fs = self._fs()
+        marker = f"{self.base_path}/_TRANSACTION_SUCCESS"
+        fs.delete(marker)
 
         def promote(pair: "tuple[str, str]") -> None:
             staging, final = pair
@@ -422,7 +429,7 @@ class TransactionalOutput:
                 # list() drains the iterator so any promotion error
                 # raises HERE, before the marker is written
                 list(pool.map(promote, self._staged))
-        fs.write_text(f"{self.base_path}/_TRANSACTION_SUCCESS", self.tx_id + "\n")
+        fs.write_text(marker, self.tx_id + "\n")
         fs.delete(self.staging_root)
         self._committed = True
         if self._counters is not None:

@@ -151,6 +151,33 @@ def test_transactional_output_abort_leaves_nothing(spark, orders, tmp_path):
     assert not os.path.exists(os.path.join(base, "orders_small"))
 
 
+def test_transactional_recommit_failure_retracts_old_marker(spark, orders, tmp_path, monkeypatch):
+    """A recommit into a committed base that fails mid-promotion must not
+    leave the earlier transaction's marker vouching for a torn mix."""
+    from asakusafw_spark_spark.sources.write import HadoopFs
+
+    base = str(tmp_path / "tx_re")
+    marker = os.path.join(base, "_TRANSACTION_SUCCESS")
+    with TransactionalOutput(base, tx_id="run100") as tx:
+        tx.prepare("a", orders.limit(5))
+        tx.prepare("b", orders.limit(6))
+    assert open(marker).read().strip() == "run100"
+
+    rename = HadoopFs.rename
+
+    def failing_rename(self, src, dst):
+        if dst.endswith("/b"):
+            raise IOError(f"injected rename failure: {src} -> {dst}")
+        rename(self, src, dst)
+
+    monkeypatch.setattr(HadoopFs, "rename", failing_rename)
+    with pytest.raises(IOError, match="injected"):
+        with TransactionalOutput(base, tx_id="run200") as tx:
+            tx.prepare("a", orders.limit(7))
+            tx.prepare("b", orders.limit(8))
+    assert not os.path.exists(marker)
+
+
 def test_bucketed_join_has_no_exchange(spark, orders, tmp_path):
     from asakusafw_spark_spark.sources import write_bucketed
 
