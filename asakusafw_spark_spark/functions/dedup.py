@@ -17,8 +17,8 @@ Scale design (the point of these ops is the 100 TB case):
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
-from pyspark.storagelevel import StorageLevel
 
+from ..caching import cache_scope, persist, release_unscoped
 from .text import tokens, fingerprint
 
 #: Mersenne prime 2^31-1: permutation modulus (a*h+b stays < 2^62).
@@ -27,103 +27,11 @@ MERSENNE_P = 2_147_483_647
 #: Monotonic suffix for CollectMetrics names (must be unique per plan).
 _OBS_SEQ = __import__("itertools").count()
 
-#: Persisted intermediates (banded signatures, chunk frames, history
-#: indexes) still referenced by lazily-returned result frames.  Spark's
-#: CacheManager holds cache entries until an explicit unpersist — NOT
-#: until GC — and MEMORY_AND_DISK disk blocks are never LRU-evicted, so
-#: a long-lived session calling these functions repeatedly accumulates
-#: blocks without bound unless it releases them.
-_LIVE_INTERMEDIATES: list[DataFrame] = []
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    """persist(MEMORY_AND_DISK) + register for release_cached_intermediates.
-
-    The persist must outlive the function (the returned frame references
-    it lazily, typically from ≥2 plan branches — a bucket-count aggregate
-    and both sides of a candidate self-join), so it cannot be unpersisted
-    before return.  Registering it gives long-lived callers a handle.
-    """
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _LIVE_INTERMEDIATES.append(df)
-    return df
-
-
-def register_intermediate(df: DataFrame) -> DataFrame:
-    """Register an ALREADY-persisted frame for
-    :func:`release_cached_intermediates` without re-persisting it.
-
-    For callers (e.g. the graph family) that manage persist timing
-    themselves but whose returned frame still references a persisted
-    input lazily — registering keeps the shared release hook able to
-    reclaim those blocks too.
-    """
-    _LIVE_INTERMEDIATES.append(df)
-    return df
-
-
-def release_cached_intermediates() -> int:
-    """Unpersist every intermediate cached by the dedup/similarity
-    family and clear the registry; returns how many were released.
-
-    Call after the action(s) consuming a returned frame complete — e.g.
-    once per micro-batch or per request in a long-lived service.  Safe
-    any time: unpersist only drops cached blocks; un-consumed result
-    frames stay valid and simply recompute their lineage.
-
-    Scope: the registry is PROCESS-GLOBAL, not per-caller — in a
-    multi-tenant driver a release from one thread also unpersists
-    intermediates a concurrent query is still consuming.  That is
-    correctness-safe (lineage recomputes) but a performance cliff:
-    serialize releases behind your request boundary, or scope them with
-    :func:`cached_intermediates_scope`, which releases only the frames
-    persisted inside its ``with`` block.
-    """
-    n = 0
-    for df in _LIVE_INTERMEDIATES:
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass  # session already stopped — nothing left to release
-    _LIVE_INTERMEDIATES.clear()
-    return n
-
-
-class cached_intermediates_scope:
-    """Context manager releasing only the intermediates persisted INSIDE
-    the ``with`` block — the per-call alternative to the process-global
-    :func:`release_cached_intermediates` for multi-tenant drivers::
-
-        with cached_intermediates_scope():
-            pairs = near_duplicate_pairs(docs).collect()
-        # pairs' banded-signature caches are released; other threads'
-        # caches are untouched
-
-    Implementation: snapshots the registry length on enter and releases
-    the tail on exit.  A concurrent thread persisting inside the window
-    gets its frames released early — correctness-safe (lineage
-    recomputes), same caveat as the global release, but the blast
-    radius shrinks from "everything live" to "what overlapped the
-    block".  ``released`` holds the count after exit.
-    """
-
-    def __init__(self) -> None:
-        self.released = 0
-
-    def __enter__(self) -> "cached_intermediates_scope":
-        self._start = len(_LIVE_INTERMEDIATES)
-        return self
-
-    def __exit__(self, *exc) -> None:
-        tail = _LIVE_INTERMEDIATES[self._start:]
-        del _LIVE_INTERMEDIATES[self._start:]
-        for df in tail:
-            try:
-                df.unpersist()
-                self.released += 1
-            except Exception:
-                pass
+#: Intermediates the returned frames read lazily (banded signatures,
+#: chunk frames, history indexes) are owned by the caller's cache scope
+#: (``caching.persist``); these public names are aliases kept for callers.
+release_cached_intermediates = release_unscoped
+cached_intermediates_scope = cache_scope
 
 
 def _observe_cap(counts: DataFrame, family: str, max_bucket: int) -> DataFrame:
@@ -454,7 +362,7 @@ def _lsh_candidates(
     width = _verify_width(df)
     base = ensure_parallelism(df).select(
         F.col(id_col).alias("id"), word_shingles(text_col, n).alias("shingles")
-    ).transform(_persist)
+    ).transform(persist)
     sig = minhash_signature(F.col("shingles"), k, seed)
     banded = _band_rows(base.withColumn("sig", sig), k, bands)
     if max_bucket is not None:
@@ -583,7 +491,7 @@ def ngram_jaccard_pairs(
     exploded = (
         base.select("id", "set_size", F.explode_outer("shingles").alias("sh"))
         .where(F.col("sh").isNotNull())
-        .transform(_persist)
+        .transform(persist)
     )
     if max_doc_freq is not None:
         # r17 (guide §3.1/§3.2): prune by ANTI-joining the HOT shingles
@@ -794,7 +702,7 @@ def simhash_pairs(
     base = (
         ensure_parallelism(df)
         .select(F.col(id_col).alias("id"), simhash(text_col, bits).alias("sh"))
-        .transform(_persist)
+        .transform(persist)
     )
     chunks = base.select(
         "id",
@@ -1468,11 +1376,11 @@ def dedup_against_corpus(
         index = build_dedup_index(
             corpus, id_col=id_col, text_col=text_col, n=n, k=k, seed=seed
         )
-    index = index.transform(_persist)
+    index = index.transform(persist)
     # build_dedup_index applies the scan-split guard itself
     new_index = build_dedup_index(
         new_docs, id_col=id_col, text_col=text_col, n=n, k=k, seed=seed
-    ).transform(_persist)
+    ).transform(persist)
 
     hist_rows = _band_rows(index, k, bands)
     new_rows = _band_rows(new_index, k, bands)

@@ -44,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .dedup import _persist, register_intermediate
+from ..caching import own, persist
 
 __all__ = ["pagerank", "bfs_levels", "triangle_count"]
 
@@ -86,6 +86,15 @@ def pagerank(
         raise ValueError("pagerank: damping must be an integer percent 0..100")
     if scale < 10**6:
         raise ValueError("pagerank: scale must be >= 1e6 (quantization)")
+    s_count = None
+    if sources is not None:
+        src_nodes = sources.select(F.col(node_col).alias("node")).distinct()
+        # validate BEFORE the first persist (a raise after it would leave
+        # a cache entry no caller holds a frame to release) and so before
+        # the n == 0 early exit: empty sources + empty edges must raise
+        s_count = src_nodes.count()
+        if s_count == 0:
+            raise ValueError("pagerank: sources is empty")
 
     # repartition FIRST, dedupe second: HashPartitioning(src) satisfies
     # the distinct's ClusteredDistribution(src, dst), so the dedupe (and
@@ -111,14 +120,7 @@ def pagerank(
     nodes = linked.select(F.col("src").alias("node")).union(
         linked.select(F.col("dst").alias("node"))
     )
-    s_count = None
     if sources is not None:
-        src_nodes = sources.select(F.col(node_col).alias("node")).distinct()
-        # validate BEFORE the n == 0 early exit: empty sources + empty
-        # edges must raise, not silently return an empty frame
-        s_count = src_nodes.count()
-        if s_count == 0:
-            raise ValueError("pagerank: sources is empty")
         nodes = nodes.union(src_nodes)  # isolated sources stay ranked
     nodes = nodes.distinct().persist(StorageLevel.MEMORY_AND_DISK)
     n = nodes.count()
@@ -184,9 +186,9 @@ def pagerank(
     nodes.unpersist()
     if last_persisted is not None:
         # the final ranks frame stays persisted (the returned frame IS
-        # the cached one) — register it so release_cached_intermediates
-        # can reclaim the blocks after the caller's action completes
-        register_intermediate(last_persisted)
+        # the cached one): the caller's cache scope owns it, and releases
+        # the blocks after the caller's action completes
+        own(last_persisted)
     return ranks
 
 
@@ -305,16 +307,15 @@ def triangle_count(
     # query at ~3-4x its persisted cost (106 -> ~35 s).  Both frames
     # are bounded by the deduplicated edge list (slim 2-3 columns).
     # The returned frame references both lazily, so they must outlive
-    # this call — they are registered in the shared intermediate
-    # registry (dedup._persist) so release_cached_intermediates()
-    # reclaims the blocks once the caller's action completes.
+    # this call: ``persist`` registers them with the caller's cache
+    # scope, which reclaims the blocks once the caller's action is done.
     und = (
         edges.where(a != b)
         .select(
             F.least(a, b).alias("a"), F.greatest(a, b).alias("b")
         )
         .distinct()
-        .transform(_persist)
+        .transform(persist)
     )
     deg = (
         und.select(F.col("a").alias("node"))
@@ -345,7 +346,7 @@ def triangle_count(
         F.when(F.col("ka") < F.col("kb"), F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(F.col("ka") < F.col("kb"), F.col("b")).otherwise(F.col("a")).alias("v"),
         F.when(F.col("ka") < F.col("kb"), F.col("kb")).otherwise(F.col("ka")).alias("kv"),
-    ).transform(_persist)
+    ).transform(persist)
     o1 = oriented.select(
         F.col("u"), F.col("v").alias("w1"), F.col("kv").alias("k1")
     )

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..caching import persist
+
 #: Tiny per-language stopword lists for the n-gram/stopword language-ID
 #: heuristic.  Deliberately small + frozen: the heuristic is the
 #: contract, not linguistic accuracy.
@@ -491,8 +493,6 @@ def bm25_rank(
     loads, build an inverted index with :func:`tfidf` + a bucketed
     write instead.
     """
-    from .dedup import _persist
-
     terms = sorted(set(query_terms))
     # r17 (guide §1.2-1): ONE tokenize pass instead of two.  The corpus
     # used to be scanned + tokenized twice — once for the per-doc term
@@ -500,14 +500,15 @@ def bm25_rank(
     # a SLIM per-doc frame — (id, dl, matched query terms only; the
     # vocabulary never materializes and no text rides the cache) — and
     # persist it; the stats aggregate and the term stream both read the
-    # cached frame.  Expressions are unchanged (dl = size(tokens(text)),
+    # cached frame, and so does the returned frame, lazily: the persist
+    # is registered with the caller's cache scope (``caching``).  Expressions are unchanged (dl = size(tokens(text)),
     # N = countDistinct(id), total_len = sum(dl) over raw rows), so the
     # score is bit-identical on every corpus including duplicate ids.
     docs = df.select(
         F.col(id_col),
         F.size(tokens(text_col)).alias("__dl__"),
         F.filter(tokens(text_col), lambda t: t.isin(*terms)).alias("__q__"),
-    ).transform(_persist)
+    ).transform(persist)
     base = docs.select(
         F.col(id_col),
         F.col("__dl__"),

@@ -12,21 +12,22 @@ kept are the ones Catalyst cannot see:
 - **persist on fan-out** — a node consumed by >1 downstream would be
   recomputed per consumer (Spark recomputes shared lineage; the
   reference's branch() multiplexing made this free).  The runner counts
-  consumers and persists nodes with fan-out > 1.
+  consumers and persists nodes with fan-out > 1, in a ``cache_scope``
+  that :meth:`FlowGraph.run` releases when it returns.
 - **concurrent sink submission** — independent outputs are submitted
   from a thread pool, as the reference fires node futures concurrently.
 """
 
 from __future__ import annotations
 
-import threading
 from collections.abc import Callable, Sequence
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.storagelevel import StorageLevel
+
+from ..caching import cache_scope, persist
 
 
 @dataclass
@@ -56,7 +57,6 @@ class FlowGraph:
     def __init__(self) -> None:
         self._nodes: dict[str, _Node] = {}
         self._sinks: list[_Sink] = []
-        self._lock = threading.Lock()
 
     # -- assembly ----------------------------------------------------------
     def source(self, name: str, loader: Callable[[SparkSession], DataFrame]) -> str:
@@ -117,10 +117,9 @@ class FlowGraph:
             counts[s.input] = counts.get(s.input, 0) + 1
         return counts
 
-    def build(
-        self, spark: SparkSession, persist_fanout: bool = True
-    ) -> dict[str, DataFrame]:
-        """Materialize every node reference → DataFrame (no actions)."""
+    def build(self, spark: SparkSession) -> dict[str, DataFrame]:
+        """Materialize every node reference → DataFrame (no actions);
+        fan-out nodes are persisted in the caller's cache scope."""
         self.validate()
         fanout = self._fanout()
         frames: dict[str, DataFrame] = {}
@@ -139,12 +138,12 @@ class FlowGraph:
                     )
                 for p, df in result.items():
                     r = f"{base}.{p}"
-                    if persist_fanout and fanout.get(r, 0) > 1:
-                        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+                    if fanout.get(r, 0) > 1:
+                        df = persist(df)
                     frames[r] = df
             else:
-                if persist_fanout and fanout.get(base, 0) > 1:
-                    result = result.persist(StorageLevel.MEMORY_AND_DISK)
+                if fanout.get(base, 0) > 1:
+                    result = persist(result)
                 frames[base] = result
             return frames[ref]
 
@@ -167,30 +166,32 @@ class FlowGraph:
         extra jobs) and a job-end summary is logged after all sinks
         complete, the reference's ``listener/OutputCounters.scala``
         behavior.  Works for ANY sink action, not just the built-in
-        writers."""
-        frames = self.build(spark)
-        if counters is not None:
-            frames = dict(frames)
-            for s in self._sinks:
-                frames[s.input] = counters.observe(s.name, frames[s.input])
-        try:
-            if len(self._sinks) == 1:
-                s = self._sinks[0]
-                s.action(frames[s.input])
-                return
-            # pool threads start with empty JVM local properties: the
-            # wrapper carries the caller's job group (cancelJobGroup,
-            # per-group accounting) and scheduler pool over to each sink
-            with ThreadPoolExecutor(max_workers=max_concurrent_sinks) as pool:
-                futures = [
-                    pool.submit(
-                        inheritable_thread_target(spark)(s.action),
-                        frames[s.input],
-                    )
-                    for s in self._sinks
-                ]
-                for f in futures:
-                    f.result()  # propagate failures
-        finally:
+        writers.  The fan-out persists are released when every sink has
+        finished, on success or failure."""
+        with cache_scope():
+            frames = self.build(spark)
             if counters is not None:
-                counters.log()
+                frames = dict(frames)
+                for s in self._sinks:
+                    frames[s.input] = counters.observe(s.name, frames[s.input])
+            try:
+                if len(self._sinks) == 1:
+                    s = self._sinks[0]
+                    s.action(frames[s.input])
+                    return
+                # pool threads start with empty JVM local properties: the
+                # wrapper carries the caller's job group (cancelJobGroup,
+                # per-group accounting) and scheduler pool over to each sink
+                with ThreadPoolExecutor(max_workers=max_concurrent_sinks) as pool:
+                    futures = [
+                        pool.submit(
+                            inheritable_thread_target(spark)(s.action),
+                            frames[s.input],
+                        )
+                        for s in self._sinks
+                    ]
+                    for f in futures:
+                        f.result()  # propagate failures
+            finally:
+                if counters is not None:
+                    counters.log()

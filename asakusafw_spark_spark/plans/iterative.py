@@ -58,7 +58,8 @@ from dataclasses import dataclass, field
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.storagelevel import StorageLevel
+
+from ..caching import cache_scope, own, persist
 
 
 @dataclass
@@ -232,25 +233,15 @@ class IterativeRunner:
 
     @contextmanager
     def _run_caches(self):
-        """Fresh per-run state: node/view caches (released on exit, on
-        success or failure), build counters and the stop flag."""
+        """Fresh per-run state: node/view memos, build counters and the
+        stop flag.  The memoised frames and view broadcasts register
+        with a :class:`~..caching.cache_scope` that releases them on
+        exit, on success or failure."""
         self._stop_requested = False
-        cache: dict[tuple, DataFrame] = {}
-        view_cache: dict[tuple, object] = {}
         self.build_counts = {}
         self.view_build_counts = {}
-        try:
-            yield cache, view_cache
-        finally:
-            self._release(cache, view_cache)
-
-    def _release(self, cache: dict, view_cache: dict) -> None:
-        for df in cache.values():
-            df.unpersist()
-        for bc in view_cache.values():
-            bc.unpersist()
-        cache.clear()
-        view_cache.clear()
+        with cache_scope():
+            yield {}, {}
 
     def _execute(
         self,
@@ -302,13 +293,15 @@ class IterativeRunner:
                     # hits below re-insert, so the FIRST same-view key
                     # is the least recently used.  unpersist only drops
                     # executor copies: a round still in flight with the
-                    # evicted broadcast re-fetches it from the driver
+                    # evicted broadcast re-fetches it from the driver;
+                    # the run's scope unpersists it again on exit, which
+                    # is harmless
                     live = [k for k in view_cache if k[0] == name]
                     while len(live) >= v.max_entries:
                         view_cache.pop(live.pop(0)).unpersist()
-                view_cache[key] = group_view(
+                view_cache[key] = own(group_view(
                     v.fn(spark, params), v.key, max_rows=v.max_rows
-                )
+                ))
                 view_build_counts[name] = view_build_counts.get(name, 0) + 1
             elif v.max_entries is not None:
                 view_cache[key] = view_cache.pop(key)  # refresh recency
@@ -335,7 +328,7 @@ class IterativeRunner:
                     if key not in cache:
                         df = n.fn(spark, params, *args)
                         # persist anything reused across rounds
-                        cache[key] = df.persist(StorageLevel.MEMORY_AND_DISK)
+                        cache[key] = persist(df)
                         build_counts[n.name] = build_counts.get(n.name, 0) + 1
                     df = cache[key]
                 frames[n.name] = df
@@ -502,31 +495,26 @@ class IterativeBatchExecutor:
         def drain() -> None:
             # executor-owned caches: NEVER/PARAMETER nodes and broadcast
             # views stay warm across separately-submitted rounds
-            cache: dict = {}
-            view_cache: dict = {}
-            self._runner.build_counts = {}
-            self._runner.view_build_counts = {}
             try:
-                ridx = 0
-                while True:
-                    params = self._queue.get()
-                    if params is None:  # sentinel: stop
-                        return
-                    self._runner._execute(
-                        self._spark,
-                        [params],
-                        self._collect,
-                        self._on_round,
-                        cache,
-                        view_cache,
-                        start_idx=ridx,
-                    )
-                    self.rounds_completed += 1
-                    ridx += 1
+                with self._runner._run_caches() as (cache, view_cache):
+                    ridx = 0
+                    while True:
+                        params = self._queue.get()
+                        if params is None:  # sentinel: stop
+                            return
+                        self._runner._execute(
+                            self._spark,
+                            [params],
+                            self._collect,
+                            self._on_round,
+                            cache,
+                            view_cache,
+                            start_idx=ridx,
+                        )
+                        self.rounds_completed += 1
+                        ridx += 1
             except BaseException as e:  # surfaced by await_completion
                 self._error = e
-            finally:
-                self._runner._release(cache, view_cache)
 
         self._thread = threading.Thread(target=drain, daemon=True)
         self._thread.start()

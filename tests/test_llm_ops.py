@@ -1752,28 +1752,45 @@ def test_edit_distance_pairs_exact_and_bound(spark):
         edit_distance_pairs(df, max_bucket=1)
 
 
+def _empty_cache_manager(spark):
+    """The session's cache manager, emptied of earlier tests' entries."""
+    from asakusafw_spark_spark.functions import release_cached_intermediates
+
+    release_cached_intermediates()
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    assert cm.isEmpty()
+    return cm
+
+
+def _persistent_rdds(spark):
+    """ids in the driver's persistent-RDD map (earlier tests' local
+    checkpoints stay there until GC, so compare sets, not sizes)."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def test_release_cached_intermediates(spark):
     from asakusafw_spark_spark.functions import (
         minhash_lsh_pairs,
         release_cached_intermediates,
     )
-    from asakusafw_spark_spark.functions import dedup as dedup_mod
 
-    release_cached_intermediates()  # start from a clean registry
+    cm = _empty_cache_manager(spark)
+    rdds = _persistent_rdds(spark)
     docs = spark.createDataFrame(
         [(i, f"doc number {i} words {' '.join(str(j) for j in range(8))}")
          for i in range(6)],
         "doc_id long, text string",
     )
     minhash_lsh_pairs(docs).collect()
-    live = list(dedup_mod._LIVE_INTERMEDIATES)
-    assert live, "minhash_lsh_pairs should register persisted intermediates"
-    assert any(df.is_cached for df in live)
+    live = _persistent_rdds(spark) - rdds
+    assert live, "minhash_lsh_pairs should leave persisted intermediates"
+    assert not cm.isEmpty()
     n = release_cached_intermediates()
     assert n == len(live)
-    assert all(not df.is_cached for df in live)
-    assert dedup_mod._LIVE_INTERMEDIATES == []
-    # idempotent on an empty registry
+    assert not live & _persistent_rdds(spark)
+    assert cm.isEmpty()
+    # idempotent once everything is released
     assert release_cached_intermediates() == 0
 
 
@@ -1786,24 +1803,28 @@ def test_cached_intermediates_scope_releases_only_its_tail(spark):
         minhash_lsh_pairs,
         release_cached_intermediates,
     )
-    from asakusafw_spark_spark.functions import dedup as dedup_mod
 
-    release_cached_intermediates()
+    cm = _empty_cache_manager(spark)
+    rdds = _persistent_rdds(spark)
     docs = spark.createDataFrame(
         [(i, f"doc number {i} words {' '.join(str(j) for j in range(8))}")
          for i in range(6)],
         "doc_id long, text string",
     )
     minhash_lsh_pairs(docs).collect()
-    outer = list(dedup_mod._LIVE_INTERMEDIATES)
+    outer = _persistent_rdds(spark) - rdds
     assert outer
+    # a different plan: an equal plan shares the outer cache entry, and
+    # Spark's cache manager would drop it for both on the scope's exit
+    inner = docs.withColumn("text", F.concat(docs.text, F.lit(" inner")))
     with cached_intermediates_scope() as scope:
-        minhash_lsh_pairs(docs.withColumn("text", docs.text)).collect()
-        assert len(dedup_mod._LIVE_INTERMEDIATES) > len(outer)
+        minhash_lsh_pairs(inner).collect()
+        assert _persistent_rdds(spark) - rdds > outer
     assert scope.released > 0
-    assert dedup_mod._LIVE_INTERMEDIATES == outer  # outer caches untouched
-    assert all(df.is_cached for df in outer)
+    assert _persistent_rdds(spark) - rdds == outer  # outer caches untouched
+    assert not cm.isEmpty()
     assert release_cached_intermediates() == len(outer)
+    assert cm.isEmpty()
 
 
 def test_dedup_against_corpus_bucket_counts_validation(spark):
@@ -1841,18 +1862,18 @@ def test_dedup_against_corpus_bucket_counts_validation(spark):
 
 def test_dedup_against_corpus_bad_args_persist_nothing(spark):
     """Argument errors must raise BEFORE the history and batch indexes
-    are persisted: a raise after ``_persist`` leaves cache entries that
+    are persisted: a raise after a persist leaves cache entries that
     no caller holds a frame to release."""
     from asakusafw_spark_spark.functions import dedup
 
+    cm = _empty_cache_manager(spark)
     df = spark.createDataFrame(
         [(0, "alpha beta gamma delta"), (1, "alpha beta gamma epsilon")],
         "doc_id long, text string",
     )
-    live = len(dedup._LIVE_INTERMEDIATES)
     with pytest.raises(ValueError, match="max_bucket must be >= 2"):
         dedup.dedup_against_corpus(df, corpus=df, max_bucket=1)
-    assert len(dedup._LIVE_INTERMEDIATES) == live
+    assert cm.isEmpty()
     with pytest.raises(ValueError, match="bands must divide k"):
         dedup.dedup_against_corpus(df, corpus=df, bands=3)
-    assert len(dedup._LIVE_INTERMEDIATES) == live
+    assert cm.isEmpty()
