@@ -14,15 +14,14 @@ scopes and scopes on other threads never release each other's frames);
 outside any scope, one process-wide set, released by
 :func:`release_unscoped`.
 
-Owners: ``FlowGraph.run`` (fan-out persists, released once every sink
-has finished); an ``IterativeRunner`` run or ``IterativeBatchExecutor``
-(node memo and view broadcasts, released after the staging pool
-drains); the caller of the dedup, graph and text functions (the
-intermediates their lazily-returned frames read).  A new thread starts
-with an empty context, so work on a thread pool (a sink action calling
-a dedup function, say) registers in the process-wide set.  Releasing is
-always correctness-safe: a frame still referenced recomputes its
-lineage.
+Owners: ``FlowGraph.run`` (fan-out persists and what its sinks
+persist, released once every sink has finished); an ``IterativeRunner``
+run or ``IterativeBatchExecutor`` (node memo and view broadcasts,
+released after every staged write drains); the caller of the dedup,
+graph and text functions (the intermediates their lazily-returned
+frames read).  Equal plans share one cache entry, owned by the
+:func:`persist` that created it.  Releasing is always correctness-safe:
+a frame still referenced recomputes its lineage.
 """
 
 from __future__ import annotations
@@ -50,8 +49,12 @@ def own(x):
 
 
 def persist(df):
-    """``persist(MEMORY_AND_DISK)`` registered with the current owner."""
-    return own(df.persist(StorageLevel.MEMORY_AND_DISK))
+    """``persist(MEMORY_AND_DISK)``, registered with the current owner
+    only if this call created the cache entry."""
+    cm = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    shared = cm.lookupCachedData(df._jdf).isDefined()
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    return df if shared else own(df)
 
 
 def _unpersist(items: list) -> int:

@@ -14,19 +14,18 @@ kept are the ones Catalyst cannot see:
   reference's branch() multiplexing made this free).  The runner counts
   consumers and persists nodes with fan-out > 1, in a ``cache_scope``
   that :meth:`FlowGraph.run` releases when it returns.
-- **concurrent sink submission** — independent outputs are submitted
-  from a thread pool, as the reference fires node futures concurrently.
+- **concurrent sink submission** — independent outputs go through
+  ``actions.run_actions``, as the reference fires node futures on one pool.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
+from ..actions import run_actions
 from ..caching import cache_scope, persist
 
 
@@ -166,8 +165,8 @@ class FlowGraph:
         extra jobs) and a job-end summary is logged after all sinks
         complete, the reference's ``listener/OutputCounters.scala``
         behavior.  Works for ANY sink action, not just the built-in
-        writers.  The fan-out persists are released when every sink has
-        finished, on success or failure."""
+        writers.  The fan-out persists and the sinks' own are released
+        when every sink has finished, on success or failure."""
         with cache_scope():
             frames = self.build(spark)
             if counters is not None:
@@ -175,23 +174,9 @@ class FlowGraph:
                 for s in self._sinks:
                     frames[s.input] = counters.observe(s.name, frames[s.input])
             try:
-                if len(self._sinks) == 1:
-                    s = self._sinks[0]
-                    s.action(frames[s.input])
-                    return
-                # pool threads start with empty JVM local properties: the
-                # wrapper carries the caller's job group (cancelJobGroup,
-                # per-group accounting) and scheduler pool over to each sink
-                with ThreadPoolExecutor(max_workers=max_concurrent_sinks) as pool:
-                    futures = [
-                        pool.submit(
-                            inheritable_thread_target(spark)(s.action),
-                            frames[s.input],
-                        )
-                        for s in self._sinks
-                    ]
-                    for f in futures:
-                        f.result()  # propagate failures
+                run_actions(spark, max_concurrent_sinks, (
+                    (s.action, (frames[s.input],), None) for s in self._sinks
+                ))
             finally:
                 if counters is not None:
                     counters.log()

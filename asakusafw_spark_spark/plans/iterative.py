@@ -39,26 +39,25 @@ Three reference compositions ride on top:
   :class:`IterativeBatchExecutor` runs rounds on a background thread
   with submit/stop/await and a per-round progress callback.
   Where the engine owns a round's actions — the staged writes of
-  :meth:`IterativeRunner.run_transactional` — it overlaps them as the
-  reference's ``Job.execute`` overlaps node futures: frames are still
-  built in round order on the caller's thread, up to
-  ``defaultParallelism`` rounds stage concurrently, ``on_round`` fires
-  in round order, and a failure or stop drains every in-flight write
-  before it propagates.  :meth:`IterativeRunner.run` and the executor
-  run a caller-supplied ``collect``, so they go one round at a time.
+  :meth:`IterativeRunner.run_transactional` — ``actions.run_actions``
+  overlaps them as the reference's ``Job.execute`` overlaps node
+  futures: frames are built in round order on the caller's thread, up
+  to ``defaultParallelism`` rounds stage at once, ``on_round`` fires in
+  round order, a failure or stop drains every in-flight write before it
+  propagates.  :meth:`IterativeRunner.run` and the executor (in its
+  starter's job group) run the caller's ``collect``: one round at a time.
 """
 
 from __future__ import annotations
 
-from collections import deque
 from collections.abc import Callable, Iterator, Mapping, Sequence
-from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
+from ..actions import run_actions
 from ..caching import cache_scope, own, persist
 
 
@@ -275,7 +274,7 @@ class IterativeRunner:
         """Yield ``(round_idx, params, frames)`` per round, building and
         memoising every node on the caller's thread, in round order.
         The stop flag is checked before each round is built, i.e. after
-        the consumer has finished with the previous one."""
+        the consumer has taken the previous one."""
         eff = self._effective_keys()
         views_by_name = {v.name: v for v in self.views}
         build_counts = self.build_counts
@@ -369,13 +368,14 @@ class IterativeRunner:
         flight (the reference fires every output as a future,
         ``Job.scala``): frames are built and memoised, and dataset
         names reserved, in round order on the caller's thread; only the
-        staged writes run on a thread pool.  ``collect`` (optional, for
-        side outputs) and ``on_round`` fire in round order on the
+        staged writes run through ``actions.run_actions``, a slot
+        freeing when any round's writes finish.  ``collect`` (optional,
+        for side outputs) and ``on_round`` fire in round order on the
         caller's thread, each after that round's staging has completed.
-        On any error or :meth:`request_stop` no further round starts,
-        and every in-flight write is drained before the exception
-        propagates — before caches are released, and with nothing
-        committed.  Returns the committed :class:`TransactionalOutput`.
+        On any error, or a :meth:`request_stop` seen after them, no
+        further round starts, and every in-flight write is drained
+        before the exception propagates — before caches are released,
+        and with nothing committed.  Returns the committed transaction.
         """
         from ..sources.write import TransactionalOutput
 
@@ -385,63 +385,35 @@ class IterativeRunner:
         if sweep_orphans:
             tx.sweep_orphans()
         tx.setup()
-        width = max(1, spark.sparkContext.defaultParallelism)
-        # (round_idx, params, frames, staging future), oldest first
-        in_flight: deque = deque()
 
-        def stage(writes: list) -> None:
-            for args in writes:
-                tx._write(*args)
+        def stage(ridx: int, params: Mapping, frames: dict, writes: list):
+            for s, name, staging in writes:
+                tx._write(name, staging, frames[s.node], s.format, s.options)
+            return ridx, params, frames
 
-        def finish_ready(limit: int) -> None:
-            """Finish rounds oldest first while more than ``limit`` are
-            in flight or the oldest is done."""
-            # a failed write anywhere in the window stops the run: the
-            # in-order finish below reaches it and re-raises
-            failed = any(
-                f.done() and f.exception() is not None
-                for *_, f in in_flight
-            )
-            while in_flight and (
-                failed or len(in_flight) > limit or in_flight[0][3].done()
-            ):
-                if self._stop_requested:
-                    return  # the caller raises StopRequested
-                ridx, params, frames, fut = in_flight.popleft()
-                fut.result()  # re-raise the round's write failure
-                if collect is not None:
-                    collect(ridx, params, frames)
-                if on_round is not None:
-                    on_round(ridx, params)
+        def finish(staged: tuple) -> None:
+            ridx, params, frames = staged
+            if collect is not None:
+                collect(ridx, params, frames)
+            if on_round is not None:
+                on_round(ridx, params)
+            if self._stop_requested:
+                raise StopRequested(f"stopped after round {ridx}")
 
-        # exit order: the pool drains every in-flight write, THEN the
-        # caches release, whether the rounds finished or raised
-        with self._run_caches() as (cache, view_cache), ThreadPoolExecutor(
-            max_workers=width
-        ) as pool:
-            for ridx, params, frames in self._frames(
-                spark, rounds, cache, view_cache
-            ):
-                writes = []
-                for s in self.sinks:
-                    name = s.name_template.format(round=ridx, **params)
-                    writes.append((
-                        name, tx._reserve(name), frames[s.node],
-                        s.format, s.options,
-                    ))
-                finish_ready(width - 1)  # wait for a free slot
-                if self._stop_requested:
-                    raise StopRequested(f"stopped before round {ridx}")
-                # wrapped per round: each target gets its own copy of
-                # the caller's JVM local properties (job group, pool)
-                fut = pool.submit(inheritable_thread_target(spark)(stage), writes)
-                in_flight.append((ridx, params, frames, fut))
-            finish_ready(0)
-            if in_flight:
-                raise StopRequested(
-                    f"stopped with {len(in_flight)} staged rounds "
-                    "uncommitted"
-                )
+        def action(ridx: int, params: Mapping, frames: dict) -> tuple:
+            writes = []
+            for s in self.sinks:
+                name = s.name_template.format(round=ridx, **params)
+                writes.append((s, name, tx._reserve(name)))
+            return stage, (ridx, params, frames, writes), finish
+
+        # run_actions drains every in-flight write, THEN the caches
+        # release, whether the rounds finished or raised
+        with self._run_caches() as (cache, view_cache):
+            run_actions(spark, spark.sparkContext.defaultParallelism, (
+                action(*r)
+                for r in self._frames(spark, rounds, cache, view_cache)
+            ))
         # reached only when every round staged: any error above leaves
         # staging for the rerun's sweep — never half-promote
         tx.commit()
@@ -516,6 +488,7 @@ class IterativeBatchExecutor:
             except BaseException as e:  # surfaced by await_completion
                 self._error = e
 
+        drain = inheritable_thread_target(self._spark)(drain)  # job group
         self._thread = threading.Thread(target=drain, daemon=True)
         self._thread.start()
         return self

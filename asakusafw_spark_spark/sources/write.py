@@ -28,6 +28,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..actions import run_actions
 from .pattern import OutputPattern
 
 Ordering = Sequence[tuple[str, str]]
@@ -48,6 +49,7 @@ class HadoopFs:
     """
 
     def __init__(self, spark: SparkSession, base: str):
+        self.spark = spark
         self._jpath = spark._jvm.org.apache.hadoop.fs.Path
         self._fs = self._jpath(base).getFileSystem(
             spark._jsc.hadoopConfiguration()
@@ -224,10 +226,10 @@ def write_grouped(
     # Every promoted file costs a handful of namenode/object-store RPCs
     # (list, mkdirs, exists, rename); serially that makes COMMIT the
     # bottleneck for patterns generating ~100k paths, so entries promote
-    # through a thread pool — Hadoop FileSystem instances are documented
-    # thread-safe, and py4j serves each Python thread over its own
-    # gateway connection.  Promotion order is irrelevant (paths are
-    # disjoint); the returned list is sorted for determinism.
+    # 16 at a time through ``run_actions`` — Hadoop FileSystem instances
+    # are documented thread-safe, and py4j serves each Python thread over
+    # its own gateway connection.  Promotion order is irrelevant (paths
+    # are disjoint); the returned list is sorted for determinism.
     fs = HadoopFs(df.sparkSession, base_path)
     entries = [e for e in fs.listdir(staging) if e.startswith(_PATH_COL + "=")]
 
@@ -253,15 +255,9 @@ def write_grouped(
         return out
 
     written: list[str] = []
-    if len(entries) <= 1:
-        for entry in entries:
-            written.extend(promote(entry))
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(16, len(entries))) as pool:
-            for out in pool.map(promote, entries):
-                written.extend(out)
+    run_actions(fs.spark, 16, (
+        (promote, (entry,), written.extend) for entry in entries
+    ))
     fs.delete(staging)
     written = sorted(written)
     if counters is not None:
@@ -396,11 +392,11 @@ class TransactionalOutput:
 
         Promotions are metadata RPCs (exists/delete/mkdirs/rename per
         dataset) with disjoint paths, so — like the grouped-output
-        promotion pass above — they run through a thread pool: a
-        10k-dataset iterative transaction commits at RPC-concurrency
+        promotion pass above — they run 16 at a time (``run_actions``):
+        a 10k-dataset iterative transaction commits at RPC-concurrency
         speed instead of serially.  An earlier transaction's marker is
         deleted BEFORE the first promotion and the new one strictly
-        FOLLOWS every promotion (pool join), preserving the two-phase
+        FOLLOWS every promotion (all drained), preserving the two-phase
         contract: a crash mid-promotion leaves no marker (not a stale
         one over a torn mix), and re-running the job re-stages and
         re-promotes idempotently."""
@@ -417,18 +413,10 @@ class TransactionalOutput:
             fs.mkdirs(final.rsplit("/", 1)[0])
             fs.rename(staging, final)
 
-        if len(self._staged) <= 1:
-            for pair in self._staged:
-                promote(pair)
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(
-                max_workers=min(16, len(self._staged))
-            ) as pool:
-                # list() drains the iterator so any promotion error
-                # raises HERE, before the marker is written
-                list(pool.map(promote, self._staged))
+        # any promotion error raises HERE, before the marker is written
+        run_actions(fs.spark, 16, (
+            (promote, (pair,), None) for pair in self._staged
+        ))
         fs.write_text(marker, self.tx_id + "\n")
         fs.delete(self.staging_root)
         self._committed = True
@@ -762,14 +750,7 @@ def merge_upsert(
             if fs.exists(parked):
                 fs.delete(parked)
 
-        if len(part_dirs) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=min(16, len(part_dirs))) as pool:
-                list(pool.map(swap, part_dirs))
-        else:
-            for rel in part_dirs:
-                swap(rel)
+        run_actions(spark, 16, ((swap, (rel,), None) for rel in part_dirs))
         for rel in emptied:
             dest = f"{target_path}/{rel}"
             if fs.exists(dest):

@@ -8,6 +8,7 @@ import pytest
 from pyspark.core.broadcast import Broadcast
 from pyspark.sql import functions as F
 
+from asakusafw_spark_spark.caching import cache_scope, persist, release_unscoped
 from asakusafw_spark_spark.functions import (
     cached_intermediates_scope,
     minhash_lsh_pairs,
@@ -280,4 +281,35 @@ def test_request_stop_releases(spark, cache_manager, unpersisted):
     with pytest.raises(StopRequested):
         runner.run(spark, _rounds(4), collect)
     assert len(seen) == 2 and set(seen) <= unpersisted
+    assert cache_manager.isEmpty()
+
+
+def test_flow_sink_persists_release_with_the_flow(spark, cache_manager):
+    """Two sinks that persist on pool threads register with ``run``'s
+    scope, as a single inline sink would, not the process-wide set."""
+    flow = FlowGraph()
+    flow.source("a", lambda s: s.range(40))
+    for k in (3, 5):
+        flow.sink(
+            f"s{k}", "a",
+            lambda df, k=k: persist(df.withColumn("v", F.col("id") * k)).count(),
+        )
+    flow.run(spark, max_concurrent_sinks=2)
+    assert cache_manager.isEmpty()
+    assert release_unscoped() == 0
+
+
+def test_scope_keeps_an_equal_outer_entry(spark, cache_manager):
+    """A scope that persists a plan equal to one cached outside it does
+    not release the shared entry on exit."""
+    def frame():
+        return spark.range(30).withColumn("v", F.col("id") * 7)
+
+    outer = persist(frame())
+    outer.count()
+    with cache_scope() as scope:
+        persist(frame()).count()
+    assert scope.released == 0
+    assert _reads_cache(outer)
+    assert release_unscoped() == 1
     assert cache_manager.isEmpty()

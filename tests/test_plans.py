@@ -50,6 +50,38 @@ def test_flow_multi_sink_keeps_caller_job_group(spark):
     assert sc.statusTracker().getJobIdsForGroup(group)
 
 
+def test_flow_failing_sink_starts_no_further_sink(spark):
+    """Six sinks through a window of two: sink 0 fails while sink 1
+    runs, so sinks 2-5 never start and sink 1 finishes first."""
+    import threading
+    import time
+
+    started, ended = [], []
+    lock = threading.Lock()
+
+    def action(i):
+        def run(df):
+            with lock:
+                started.append(i)
+            if i == 0:
+                time.sleep(0.2)
+                raise RuntimeError("sink 0 failed")
+            df.count()
+            time.sleep(0.5)
+            with lock:
+                ended.append(i)
+        return run
+
+    flow = FlowGraph()
+    flow.source("a", lambda s: s.range(20))
+    for i in range(6):
+        flow.sink(f"s{i}", "a", action(i))
+    with pytest.raises(RuntimeError, match="sink 0 failed"):
+        flow.run(spark, max_concurrent_sinks=2)
+    assert sorted(started) == [0, 1]
+    assert ended == [1]
+
+
 def test_flow_rejects_unknown_input():
     flow = FlowGraph()
     with pytest.raises(ValueError, match="unknown input"):
@@ -345,6 +377,37 @@ def test_iterative_executor_error_surfaces_on_await(spark):
     ex.stop()
     with pytest.raises(ValueError, match="round failed"):
         ex.await_completion(timeout=60)
+
+
+def test_iterative_executor_keeps_caller_job_group(spark):
+    """Rounds run on the executor's thread carry the job group of the
+    thread that started it, so ``cancelJobGroup`` reaches them."""
+    from asakusafw_spark_spark.plans.iterative import (
+        IterativeBatchExecutor, IterativeRunner,
+    )
+
+    runner = IterativeRunner()
+    runner.node("n", lambda sp, p: sp.range(10 * (p["r"] + 1)), always=True)
+    groups = []
+
+    def collect(i, p, frames):
+        frames["n"].count()
+        groups.append(spark.sparkContext.getLocalProperty("spark.jobGroup.id"))
+
+    sc = spark.sparkContext
+    group = "iterative_executor"
+    sc.setJobGroup(group, "executor rounds")
+    try:
+        ex = IterativeBatchExecutor(runner, spark, collect)
+        for r in range(3):
+            ex.submit({"r": r})
+        ex.start()
+    finally:
+        sc._jsc.clearJobGroup()
+    ex.stop()
+    ex.await_completion(timeout=120)
+    assert groups == [group] * 3
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 3
 
 
 def test_iterative_request_stop_between_rounds(spark):
