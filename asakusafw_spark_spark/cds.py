@@ -214,13 +214,15 @@ def promote(plan: LaunchPlan, returncode: int | None) -> str | None:
     return path
 
 
-def prune(cache: str, key: str) -> None:
+def prune(cache: str, key: str, keep: str | None = None) -> None:
     """Remove archives of other keys, archives whose size no longer
-    matches their name, and temp files of processes that have ended."""
+    matches their name, archives of ``key`` other than ``keep`` (when
+    given), and temp files of processes that have ended."""
     for name in os.listdir(cache):
         path = os.path.join(cache, name)
         a, t = _ARCHIVE.fullmatch(name), _TEMP.fullmatch(name)
-        if ((a and (a.group(1) != key or not _whole(path, a.group(2))))
+        if ((a and (a.group(1) != key or not _whole(path, a.group(2))
+                    or (keep is not None and path != keep)))
                 or (t and not _alive(int(t.group(1))))):
             try:
                 os.remove(path)
@@ -252,5 +254,5 @@ def finish_dump(plan: LaunchPlan, proc: subprocess.Popen) -> None:
     if path is None:
         _LOG.info("driver JVM class-data sharing: dump not promoted (JVM exit %s)", rc)
         return
-    prune(plan.cache_dir, plan.key)
+    prune(plan.cache_dir, plan.key, keep=path)
     _LOG.info("driver JVM class-data sharing: promoted %s", path)

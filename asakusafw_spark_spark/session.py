@@ -36,6 +36,19 @@ roughly halves session start and the first job:
 
 One INFO line on the ``asakusafw_spark_spark.session`` logger per launch
 says whether the archive was mapped, is being dumped, or is off and why.
+
+Python workers: PySpark's worker re-reads the directory of every zip
+archive on its ``sys.path`` (the spark-core jar, ``pyspark.zip``,
+py4j) before each task, ~100 ms of every Python task (``mapInPandas``
+group operators, pandas UDFs).  On a local master the builder starts
+the workers from :mod:`.pydaemon`, which re-reads an archive only when
+it changed: ``spark.python.daemon.module`` names it and the package's
+parent directory is appended to ``spark.executorEnv.PYTHONPATH`` (a
+caller's entries come first).  A caller's own daemon module or
+``spark.python.use.daemon=false`` wins; opt out with
+``spark.python.daemon.module=pyspark.daemon``.  Other masters are left
+as they are: there the package may arrive by ``--py-files``, which a
+daemon cannot import.
 """
 
 from __future__ import annotations
@@ -54,6 +67,8 @@ _LOG = logging.getLogger("asakusafw_spark_spark.session")
 #: Reference "TINY" broadcast size limit, 20 MiB
 #: (planner/.../PartitionGroupAnalyzer.java:68-78).
 TINY_BROADCAST_BYTES = 20 * 1024 * 1024
+
+_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
 
 
 class _EngineBuilder(SparkSession.Builder):
@@ -132,9 +147,28 @@ def engine_builder(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    if master.startswith("local"):
+        conf.update(_python_worker_conf(conf))
+    for k, v in conf.items():
         b = b.config(k, v)
     return b
+
+
+def _python_worker_conf(conf: dict[str, str]) -> dict[str, str]:
+    """The confs that start Python workers from :mod:`.pydaemon`, merged
+    with the caller's ``conf``; none when the caller picks the daemon."""
+    if ("spark.python.daemon.module" in conf
+            or conf.get("spark.python.use.daemon", "true").lower() == "false"):
+        return {}
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in conf.get(_PYTHONPATH, "").split(os.pathsep) if p]
+    if root not in paths:
+        paths.append(root)
+    return {
+        "spark.python.daemon.module": f"{__package__}.pydaemon",
+        _PYTHONPATH: os.pathsep.join(paths),
+    }
 
 
 def get_spark(**kwargs) -> SparkSession:

@@ -297,7 +297,7 @@ class TransactionalOutput:
     ):
         self.base_path = base_path
         self.tx_id = tx_id or f"tx_{int(time.time() * 1000)}"
-        self._staged: list[tuple[str, str]] = []  # (staging dir, final dir)
+        self._staged: dict[str, str] = {}  # final dir -> staging dir, in order
         self._committed = False
         self._spark = spark
         self._counters = counters
@@ -356,7 +356,7 @@ class TransactionalOutput:
         try:
             self._write(name, staging, df, format, options)
         except BaseException:
-            self._staged.remove((staging, f"{self.base_path}/{name}"))
+            del self._staged[f"{self.base_path}/{name}"]  # free the name for a retry
             raise
 
     def _reserve(self, name: str) -> str:
@@ -367,14 +367,14 @@ class TransactionalOutput:
         if os.path.isabs(name) or ".." in name.split("/"):
             raise ValueError(f"prepare: dataset name escapes base: {name!r}")
         final = f"{self.base_path}/{name}"
-        if any(final == f for _, f in self._staged):
+        if final in self._staged:
             raise ValueError(
                 f"prepare: dataset {name!r} already staged in this "
                 "transaction — per-round sink templates must embed a "
                 "round-distinct variable (e.g. 'out/round={round}')"
             )
         staging = f"{self.staging_root}/{name}"
-        self._staged.append((staging, final))
+        self._staged[final] = staging
         return staging
 
     def _write(
@@ -404,8 +404,7 @@ class TransactionalOutput:
         marker = f"{self.base_path}/_TRANSACTION_SUCCESS"
         fs.delete(marker)
 
-        def promote(pair: "tuple[str, str]") -> None:
-            staging, final = pair
+        def promote(final: str, staging: str) -> None:
             if fs.exists(final):
                 fs.delete(final)
             # nested dataset names (e.g. iterative "rounds/r=3") need
@@ -415,7 +414,7 @@ class TransactionalOutput:
 
         # any promotion error raises HERE, before the marker is written
         run_actions(fs.spark, 16, (
-            (promote, (pair,), None) for pair in self._staged
+            (promote, pair, None) for pair in self._staged.items()
         ))
         fs.write_text(marker, self.tx_id + "\n")
         fs.delete(self.staging_root)

@@ -151,6 +151,30 @@ def test_transactional_output_abort_leaves_nothing(spark, orders, tmp_path):
     assert not os.path.exists(os.path.join(base, "orders_small"))
 
 
+def test_transactional_reserve_is_linear_and_rejects_duplicates(tmp_path):
+    """Reserving a name is a set lookup: 10 000 rounds of an iterative
+    transaction reserve in well under a second (a scan of every earlier
+    name took 1.66 s), and a duplicate is still caught at the end."""
+    import time
+
+    tx = TransactionalOutput(str(tmp_path / "tx_many"))
+    t = time.perf_counter()
+    for i in range(10_000):
+        tx._reserve(f"rounds/r={i}")
+    assert time.perf_counter() - t < 0.5
+    with pytest.raises(ValueError, match="already staged"):
+        tx._reserve("rounds/r=9999")
+
+
+def test_transactional_failed_prepare_frees_its_name(spark, orders, tmp_path):
+    base = str(tmp_path / "tx_retry")
+    with TransactionalOutput(base) as tx:
+        with pytest.raises(Exception):
+            tx.prepare("ds", orders.limit(5), format="no_such_format")
+        tx.prepare("ds", orders.limit(5))
+    assert spark.read.parquet(os.path.join(base, "ds")).count() == 5
+
+
 def test_transactional_recommit_failure_retracts_old_marker(spark, orders, tmp_path, monkeypatch):
     """A recommit into a committed base that fails mid-promotion must not
     leave the earlier transaction's marker vouching for a torn mix."""

@@ -3,6 +3,7 @@
 then real launches in fresh subprocesses."""
 
 import glob
+import io
 import json
 import os
 import subprocess
@@ -153,6 +154,27 @@ def test_prune_keeps_whole_archives_of_the_key_and_live_temps(homes):
             f.write(b"1234")
     cds.prune(cache, key)
     assert sorted(os.listdir(cache)) == sorted([names["keep"], names["live_temp"]])
+
+
+def test_second_promotion_of_a_key_replaces_the_first(homes):
+    """Two launches that both found no archive both dump; the later
+    promotion leaves the only archive of the key."""
+
+    class Exited:  # a dumping JVM that wrote its archive and exited 0
+        stdin = io.StringIO()
+
+        def wait(self, timeout):
+            return 0
+
+    plan = cds.plan_launch({}, homes)
+    for size in (64, 96):
+        with open(plan.temp, "wb") as f:
+            f.write(b"\xa8\xab\x0b\xf0" + b"\1" * (size - 4))
+        cds.finish_dump(plan, Exited())
+    kept = f"driver-{plan.key}-96.jsa"
+    assert sorted(glob.glob(os.path.join(plan.cache_dir, "*.jsa"))) == [
+        os.path.join(plan.cache_dir, kept)]
+    assert cds.plan_launch({}, homes).archive == os.path.join(plan.cache_dir, kept)
 
 
 # -- real launches ------------------------------------------------------
