@@ -17,8 +17,9 @@ of a dumping launch has exited.
   (SIGBUS) on a torn archive instead of falling back.
 - A dump is written to a per-process temp file and promoted with one
   ``os.replace`` only when the JVM exited 0 and the file carries the
-  archive magic.  Archives of other keys, torn archives and the temp
-  files of ended processes are then pruned.
+  archive magic.  After a promotion, and at each launch that maps an
+  archive, every other archive (of other keys, torn, or a second one
+  of the same key) and the temp files of ended processes are pruned.
 - CDS rejects a non-empty directory on the classpath, and Spark puts
   its conf dir there.  A conf dir holding nothing but ``*.template``
   files is swapped for an empty one under the cache; a conf dir with a
@@ -184,6 +185,9 @@ def plan_launch(options: dict[str, str], environ=os.environ,
     key = archive_key(java_home, jars_dir, classpath)
     archive = find_archive(cache, key)
     if archive is not None:
+        # archives of this key other than the one mapped (two launches
+        # that both dumped into an empty cache) are never mapped again
+        prune(cache, key, keep=archive)
         mode, flag, temp = "hit", f"-XX:SharedArchiveFile={archive}", None
     elif os.access(cache, os.W_OK):
         temp = os.path.join(cache, f"driver-{key}.{os.getpid()}.tmp")

@@ -16,6 +16,20 @@ sorts within partitions — the same single wide dependency the reference
 uses.  One-file-per-path is inherently serial per path; for skewed path
 distributions pass ``max_records_per_file`` to allow Spark to split a
 hot path into numbered parts (relaxation flagged to the caller).
+
+Datasets rewritten in place (:func:`merge_upsert`, :func:`compact_files`,
+:func:`write_zordered`, the streaming state tables) share one crash
+protocol, single writer per dataset.  The new version is staged in a
+sibling dir; :func:`_publish` parks the live dir as ``<base>__old_<ms>``,
+renames the staging dir in and then deletes the parked copy (a failed
+rename restores it).  A crash between the two renames leaves the base
+missing and its data parked, so every writer first calls
+:func:`_heal_dataset`: it restores the newest parked copy when the base
+is missing and deletes the rest.  Partition swaps park under
+``<base>__parked/<partition>`` instead, and :func:`_settle_parked`
+applies one rule to each parked partition: delete it when the live copy
+exists, rename it back otherwise.  Parked copies are siblings of the
+dataset, so no reader of the base ever sees them.
 """
 
 from __future__ import annotations
@@ -26,9 +40,9 @@ import urllib.parse
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..actions import run_actions
+from ..caching import cache_scope, persist
 from .pattern import OutputPattern
 
 Ordering = Sequence[tuple[str, str]]
@@ -54,6 +68,12 @@ class HadoopFs:
         self._fs = self._jpath(base).getFileSystem(
             spark._jsc.hadoopConfiguration()
         )
+
+    def qualify(self, p: str) -> str:
+        """``p`` with scheme and absolute path, a relative one resolved
+        against the filesystem's working directory as Spark's writers
+        resolve it."""
+        return str(self._fs.makeQualified(self._jpath(p)))
 
     def exists(self, p: str) -> bool:
         return self._fs.exists(self._jpath(p))
@@ -210,16 +230,11 @@ def write_grouped(
     pathed = pathed.repartition(F.col(_PATH_COL)).sortWithinPartitions(*sort_cols)
 
     staging = f"{base_path}/_staging_{int(time.time() * 1000)}"
-    w = pathed.write.mode("overwrite").partitionBy(_PATH_COL)
     if max_records_per_file:
-        w = w.option("maxRecordsPerFile", str(max_records_per_file))
-    fmt = format
-    if fmt == "tsv":
-        options.setdefault("sep", "\t")
-        fmt = "csv"
-    if fmt == "csv":
-        options.setdefault("header", True)
-    w.options(**options).format(fmt).save(staging)
+        options.setdefault("maxRecordsPerFile", str(max_records_per_file))
+    write_flat(
+        pathed, staging, format=format, partition_by=[_PATH_COL], **options
+    )
 
     # promotion pass: <staging>/__output_path__=<enc>/part-*.ext → <base>/<path>
     # (Hadoop FS throughout — same code path on file://, hdfs://, s3a://).
@@ -478,23 +493,90 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-def _sibling_olds(fs: HadoopFs, base: str) -> list[str]:
-    """Sibling ``<base>__old_*`` directories parked by a dataset swap."""
-    parent, name = base.rsplit("/", 1)
+def _siblings(fs: HadoopFs, base: str, infix: str) -> list[str]:
+    """Sorted ``<base><infix>*`` siblings of a dataset dir (``base`` may
+    be relative; the results are qualified)."""
+    parent, name = fs.qualify(base).rstrip("/").rsplit("/", 1)
     try:
         names = fs.listdir(parent)
     except Exception:
-        return []
-    return [f"{parent}/{n}" for n in names if n.startswith(name + "__old_")]
+        return []  # no parent dir: no siblings
+    return [f"{parent}/{n}" for n in names if n.startswith(name + infix)]
 
 
-def _parked_path(base: str, rel: str) -> str:
-    """Parking path for a partition dir mid-swap.  Parked data lives
-    OUTSIDE the dataset tree (a ``__parked`` sibling) — an in-tree
-    marker dir would feed Spark's partition inference (a dir named
-    ``_old_day=x`` at partition level raises
-    CONFLICTING_PARTITION_COLUMN_NAMES on read)."""
-    return f"{base}__parked/{rel}"
+def _heal_dataset(
+    fs: HadoopFs, base: str, log: list[str] | None = None
+) -> bool:
+    """Undo a crash inside :func:`_publish`: when ``base`` is missing,
+    restore its newest parked ``__old_*`` copy; delete every other.
+    Returns whether ``base`` exists afterwards."""
+    olds = _siblings(fs, base, "__old_")
+    exists = fs.exists(base)
+    if olds and not exists:
+        fs.rename(olds[-1], base)
+        if log is not None:
+            log.append(f"restored dataset from {olds[-1]}")
+        olds, exists = olds[:-1], True
+    for o in olds:
+        fs.delete(o)
+        if log is not None:
+            log.append(f"deleted leftover {o}")
+    return exists
+
+
+def _publish(fs: HadoopFs, base: str, staging: str) -> None:
+    """Move ``staging`` to ``base``.  An existing ``base`` is parked as
+    an ``__old_*`` sibling first and deleted only after the staging
+    rename succeeded; a failed rename restores it and leaves staging."""
+    if not fs.exists(base):
+        fs.rename(staging, base)
+        return
+    old = f"{base}__old_{int(time.time() * 1000)}"
+    fs.rename(base, old)
+    try:
+        fs.rename(staging, base)
+    except Exception:
+        fs.rename(old, base)
+        raise
+    fs.delete(old)
+
+
+def _parked_path(base: str, rel: str | None = None) -> str:
+    """Parking path for a partition dir mid-swap (the parking root when
+    ``rel`` is None).  Parked data lives OUTSIDE the dataset tree (a
+    ``__parked`` sibling) — an in-tree marker dir would feed Spark's
+    partition inference (a dir named ``_old_day=x`` at partition level
+    raises CONFLICTING_PARTITION_COLUMN_NAMES on read)."""
+    root = f"{base}__parked"
+    return root if rel is None else f"{root}/{rel}"
+
+
+def _settle_parked(
+    fs: HadoopFs, parked: str, live: str, log: list[str] | None = None
+) -> None:
+    """If a parked partition copy exists, delete it when its live copy
+    exists (the swap finished) and rename it back otherwise."""
+    if not fs.exists(parked):
+        return
+    if fs.exists(live):
+        fs.delete(parked)
+        action = f"deleted parked {parked} (live copy exists)"
+    else:
+        fs.mkdirs(live.rsplit("/", 1)[0])
+        fs.rename(parked, live)
+        action = f"restored {live} from parked copy"
+    if log is not None:
+        log.append(action)
+
+
+def _drop_parked_root(fs: HadoopFs, base: str) -> bool:
+    """Delete the parking root if it exists and is EMPTY (never drop
+    parked data); returns whether it was deleted."""
+    root = _parked_path(base)
+    if fs.exists(root) and not fs.listdir(root):
+        fs.delete(root)
+        return True
+    return False
 
 
 #: Directory name Spark/Hive write for a NULL partition value
@@ -577,14 +659,12 @@ def merge_upsert(
 
     Not a concurrent-writer log-structured table (no snapshot isolation
     between concurrent merges — that is Delta/Iceberg territory).  Crash
-    SAFETY (single writer): every swap parks the previous data under a
-    ``_old``-prefixed sibling (underscore-prefixed paths are invisible
-    to Spark/Hadoop readers) before renaming the staged data in, and the
-    NEXT merge restores any parked data whose live path is missing
-    BEFORE it reads current state — so a replayed merge after a mid-swap
-    crash is self-healing for the dataset and every partition it
-    touches.  A crashed partition a later merge does NOT touch stays
-    parked (invisible to reads) until :func:`recover_merge` restores it.
+    SAFETY (single writer): swaps follow this module's park/heal/publish
+    protocol, and the NEXT merge heals the dataset and every partition
+    it touches BEFORE it reads current state — so a replayed merge after
+    a mid-swap crash is self-healing.  A crashed partition a later merge
+    does NOT touch stays parked (invisible to reads) until
+    :func:`recover_merge` restores it.
     Staging directories are never deleted on error — every byte exists
     somewhere at every instant.  Never reads and writes the same path in
     one job (the classic self-overwrite corruption): staging is always a
@@ -611,29 +691,20 @@ def merge_upsert(
     base = target_path.rstrip("/")
     staging = f"{base}__merge_{int(time.time() * 1000)}"
 
-    # dataset-level crash healing: a mid-swap crash on the unpartitioned
-    # path leaves target missing and the data parked under __old_* — a
-    # replayed merge must RESTORE it, never mistake it for first load
-    olds = _sibling_olds(fs, base)
-    if not fs.exists(target_path):
-        if olds:
-            fs.rename(sorted(olds)[-1], target_path)
-            for o in sorted(olds)[:-1]:
-                fs.delete(o)
-        else:
-            write_flat(
-                inserts, target_path, format=format, mode="overwrite",
-                partition_by=parts or None, **options,
-            )
-            return
-    elif olds:  # completed swap that crashed before cleanup
-        for o in olds:
-            fs.delete(o)
+    # a replayed merge after a crashed swap must RESTORE the parked
+    # dataset, never mistake it for a first load
+    if not _heal_dataset(fs, base):
+        write_flat(
+            inserts, target_path, format=format, mode="overwrite",
+            partition_by=parts or None, **options,
+        )
+        return
 
     # the updates lineage feeds three plans (touched-partition pruning,
-    # key anti-join, the insert union) — materialize it once
-    updates = updates.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    # key anti-join, the insert union) — materialize it once; a frame
+    # the caller persisted stays cached
+    with cache_scope():
+        updates = persist(updates)
         touched_vals: list = []
         touched = None
         if parts:
@@ -662,10 +733,9 @@ def merge_upsert(
             # partition-level crash healing BEFORE reading current state:
             # restore any touched partition parked by a crashed swap
             for rel in _escape_rels(spark, parts, touched_vals):
-                dest = f"{target_path}/{rel}"
-                parked = _parked_path(base, rel)
-                if not fs.exists(dest) and fs.exists(parked):
-                    fs.rename(parked, dest)
+                _settle_parked(
+                    fs, _parked_path(base, rel), f"{target_path}/{rel}"
+                )
         reader = spark.read.format(format)
         if evolve_schema:
             # touched-partition rewrites leave untouched partitions on
@@ -711,8 +781,6 @@ def merge_upsert(
             merged, staging, format=format, mode="overwrite",
             partition_by=parts or None, **options,
         )
-    finally:
-        updates.unpersist()
 
     if parts:
         # swap only the staged partition directories (depth = len(parts))
@@ -737,8 +805,7 @@ def merge_upsert(
             dest = f"{target_path}/{rel}"
             fs.mkdirs(dest.rsplit("/", 1)[0])
             parked = _parked_path(base, rel)
-            if fs.exists(parked):
-                fs.delete(parked)  # leftover from a prior completed swap
+            _settle_parked(fs, parked, dest)  # leftover of a prior swap
             if fs.exists(dest):
                 # park, don't delete: a crash between these two renames
                 # leaves the data recoverable (healed by the next merge
@@ -755,18 +822,9 @@ def merge_upsert(
             if fs.exists(dest):
                 fs.delete(dest)
         fs.delete(staging)  # success only — on error staging survives
-        parked_root = f"{base}__parked"
-        if fs.exists(parked_root) and not fs.listdir(parked_root):
-            fs.delete(parked_root)  # only when EMPTY — never drop parked data
+        _drop_parked_root(fs, base)
     else:
-        old = f"{base}__old_{int(time.time() * 1000)}"
-        fs.rename(target_path, old)
-        try:
-            fs.rename(staging, target_path)
-        except Exception:
-            fs.rename(old, target_path)  # restore — staging left for retry
-            raise
-        fs.delete(old)
+        _publish(fs, base, staging)
 
 
 def recover_merge(
@@ -784,42 +842,24 @@ def recover_merge(
     fs = HadoopFs(spark, target_path)
     base = target_path.rstrip("/")
     actions: list[str] = []
-
-    olds = _sibling_olds(fs, base)
-    if not fs.exists(target_path):
-        if olds:
-            fs.rename(sorted(olds)[-1], target_path)
-            actions.append(f"restored dataset from {sorted(olds)[-1]}")
-            olds = sorted(olds)[:-1]
-        else:
-            return actions
-    for o in olds:
-        fs.delete(o)
-        actions.append(f"deleted leftover {o}")
-
-    parked_root = f"{base}__parked"
-    if not fs.exists(parked_root):
+    if not _heal_dataset(fs, base, actions):
+        return actions
+    if not fs.exists(_parked_path(base)):
         return actions
 
     def walk(rel: str, depth: int) -> None:
-        here = f"{parked_root}/{rel}" if rel else parked_root
-        for name in fs.listdir(here):
+        for name in fs.listdir(_parked_path(base, rel or None)):
             sub = f"{rel}/{name}" if rel else name
             if depth > 1 and "=" in name:
                 walk(sub, depth - 1)
-                continue
-            live = f"{target_path}/{sub}"
-            if fs.exists(live):
-                fs.delete(f"{parked_root}/{sub}")
-                actions.append(f"deleted parked {sub} (live copy exists)")
             else:
-                fs.mkdirs(live.rsplit("/", 1)[0])
-                fs.rename(f"{parked_root}/{sub}", live)
-                actions.append(f"restored {live} from parked copy")
+                _settle_parked(
+                    fs, _parked_path(base, sub), f"{target_path}/{sub}",
+                    actions,
+                )
 
     walk("", max(partition_depth, 1))
-    if not fs.listdir(parked_root):
-        fs.delete(parked_root)
+    if _drop_parked_root(fs, base):
         actions.append("removed empty parked root")
     return actions
 
@@ -841,19 +881,18 @@ def compact_files(
     reads, task scheduling — becomes its own bottleneck.  Run this on a
     maintenance cadence.
 
-    Crash contract mirrors ``merge_upsert``'s whole-dataset path: the
-    compacted copy is staged beside the dataset, the live dir moves to
-    an ``__old_*`` sibling, and only after the staging rename succeeds
-    is the old data deleted — a failure mid-swap restores the original
-    and leaves staging for retry.  Readers racing the swap see the old
-    or the new dataset, never a mix.  No snapshot isolation vs
-    concurrent WRITERS (same caveat as merge_upsert).
+    The compacted copy is staged beside the dataset and published by
+    the park/heal/publish protocol of this module (its docstring); a
+    dataset left parked by a crashed swap is healed first.  Readers
+    racing the swap see the old or the new dataset, never a mix.  No
+    snapshot isolation vs concurrent WRITERS (same caveat as
+    merge_upsert).
     """
     import math
-    import time
 
     fs = HadoopFs(spark, path)
     base = path.rstrip("/")
+    _heal_dataset(fs, base)
     sizes = [
         s
         for p in fs.glob(f"{base}/*")
@@ -865,25 +904,8 @@ def compact_files(
     df = spark.read.format(format).load(base)
     staging = f"{base}__compact_{int(time.time() * 1000)}"
     df.repartition(n_files).write.format(format).mode("overwrite").save(staging)
-    _atomic_swap(fs, base, staging)
+    _publish(fs, base, staging)
     return n_files
-
-
-def _atomic_swap(fs: HadoopFs, base: str, staging: str) -> None:
-    """Swap ``staging`` over ``base`` with the park-restore crash
-    contract shared by compact_files/merge_upsert: the live dir parks
-    to an ``__old_*`` sibling first; a failed swap restores it and
-    leaves staging for retry; only success deletes the parked copy."""
-    import time
-
-    old = f"{base}__old_{int(time.time() * 1000)}"
-    fs.rename(base, old)
-    try:
-        fs.rename(staging, base)
-    except Exception:
-        fs.rename(old, base)  # restore — staging left for retry
-        raise
-    fs.delete(old)
 
 
 def _quantile_bucket_expr(v, cuts: "list[float]", base: int = 0):
@@ -935,8 +957,8 @@ def write_zordered(
        the curve) + ``sortWithinPartitions`` ⇒ tight per-file min/max
        on every clustered column.
 
-    The write is atomic when ``path`` already exists (staging +
-    park-and-swap, same contract as :func:`compact_files`); content is
+    The write stages beside ``path`` and publishes by this module's
+    park/heal/publish protocol (same as :func:`compact_files`); content is
     byte-identical to the input — layout is the ONLY thing that
     changes (the roundtrip oracle checks exactly this).
     """
@@ -981,14 +1003,10 @@ def write_zordered(
     )
     base = path.rstrip("/")
     fs = HadoopFs(spark, base)
-    if fs.exists(base):
-        import time
-
-        staging = f"{base}__zorder_{int(time.time() * 1000)}"
-        ordered.write.format(format).mode("overwrite").save(staging)
-        _atomic_swap(fs, base, staging)
-    else:
-        ordered.write.format(format).mode("overwrite").save(base)
+    _heal_dataset(fs, base)
+    staging = f"{base}__zorder_{int(time.time() * 1000)}"
+    ordered.write.format(format).mode("overwrite").save(staging)
+    _publish(fs, base, staging)
 
 
 def dataset_manifest(spark: SparkSession, path: str) -> DataFrame:

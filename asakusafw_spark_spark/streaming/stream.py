@@ -245,6 +245,30 @@ def run_available_now(
             spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def _start(
+    stream_df: DataFrame,
+    sink,
+    checkpoint_dir: str,
+    query_name: str,
+    available_now: bool,
+    mode: str = "append",
+):
+    """Start ``stream_df`` into the ``foreachBatch`` ``sink``.  With
+    ``available_now`` the query drains what is available and has
+    terminated on return; otherwise it runs on until stopped."""
+    w = (
+        stream_df.writeStream.outputMode(mode)
+        .queryName(query_name)
+        .option("checkpointLocation", checkpoint_dir)
+        .foreachBatch(sink)
+    )
+    if not available_now:
+        return w.start()
+    q = w.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q
+
+
 def stream_to_direct_output(
     stream_df: DataFrame,
     base_path: str,
@@ -285,17 +309,9 @@ def stream_to_direct_output(
                 ordering=ordering, format=format,
             )
 
-    w = (
-        stream_df.writeStream.outputMode(mode)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
+    return _start(
+        stream_df, sink, checkpoint_dir, query_name, available_now, mode
     )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return w.start()
 
 
 def stream_interval_join(
@@ -372,17 +388,7 @@ def stream_merge_upsert(
             partition_by=partition_by, delete_col=delete_col, format=format,
         )
 
-    w = (
-        stream_df.writeStream.outputMode("append")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-    )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return w.start()
+    return _start(stream_df, sink, checkpoint_dir, query_name, available_now)
 
 
 def stream_dedup_ingest(
@@ -434,98 +440,70 @@ def stream_dedup_ingest(
         )
         kept.write.format(format).mode("append").save(target_path)
 
-    w = (
-        stream_df.writeStream.outputMode("append")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-    )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return w.start()
+    return _start(stream_df, sink, checkpoint_dir, query_name, available_now)
 
 
-def _run_maintain_batch(
-    spark: SparkSession,
+def _maintain_sink(
     target_path: str,
     checkpoint_dir: str,
-    batch_id: int,
     staging_prefix: str,
     format: str,
-    compute_new_state,
-) -> None:
-    """The exactly-once MAINTAIN skeleton shared by every state-table
-    sink (stream_agg_maintain, stream_distinct_sketch_maintain):
+    fold: Callable[[DataFrame, "DataFrame | None"], DataFrame],
+):
+    """The exactly-once ``foreachBatch`` sink shared by every state-table
+    maintainer.  Per non-empty batch:
 
-    1. crash healing — restore the newest ``__old_*`` parked copy if a
-       crash mid-:func:`_atomic_swap` left the state dir missing, drop
-       stale parks, and sweep orphaned ``<staging_prefix>*`` staging
-       dirs (always safe: the batch that produced one is replayed);
+    1. heal the state dir (``sources/write.py``'s park/heal/publish
+       protocol) and sweep orphaned ``<staging_prefix>*`` staging dirs
+       (always safe: the batch that produced one is replayed);
     2. replay skip — the ``<checkpoint lineage>:<batch id>`` marker
-       INSIDE the state dir swaps atomically with the data, so a
-       replayed batch (same lineage, id ≤ marker) is a no-op while a
-       NEW query over existing state starts a fresh lineage and is
-       never skipped;
-    3. ``compute_new_state(exists)`` builds the next state frame;
-    4. atomic publish — staging write + marker, then park-and-swap.
+       INSIDE the state dir is published with the data, so a replayed
+       batch (same lineage, id ≤ marker) is a no-op while a NEW query
+       over existing state starts a fresh lineage and is never skipped;
+    3. ``fold(batch_df, state)`` builds the next state frame from the
+       batch and the current state (None before the first batch);
+    4. stage it with the marker and publish it.
 
-    One implementation so a crash-healing fix can never again apply to
-    one maintainer and silently miss the other.
-
-    SINGLE WRITER per target: the orphan-staging sweep (step 1) deletes
-    every ``<name><staging_prefix>*`` sibling, so a second concurrently
+    SINGLE WRITER per target: the orphan-staging sweep deletes every
+    ``<name><staging_prefix>*`` sibling, so a second concurrently
     maintaining query on the same ``target_path`` would have its
     in-flight staging swept (it fails loudly at its swap, never
     corrupts state — but don't do it).  Run concurrent maintainers
     against distinct targets.
     """
-    import os
-
-    from ..sources.write import HadoopFs, _atomic_swap, _sibling_olds
-
-    if "://" not in target_path and not os.path.isabs(target_path):
-        # a slash-free relative target ("state") would break the
-        # parent/name split below — qualify it like Spark's writers do
-        target_path = os.path.abspath(target_path)
-    base = target_path.rstrip("/")
-    fs = HadoopFs(spark, base)
-    olds = _sibling_olds(fs, base)
-    if olds:
-        if not fs.exists(base):
-            fs.rename(sorted(olds)[-1], base)
-            olds = sorted(olds)[:-1]
-        for o in olds:
-            fs.delete(o)
-    parent, name = base.rsplit("/", 1)
-    try:
-        for n in fs.listdir(parent):
-            if n.startswith(name + staging_prefix):
-                fs.delete(f"{parent}/{n}")
-    except Exception:
-        pass  # parent unlistable => base missing too; first batch
-    exists = fs.exists(base)
-    lineage = checkpoint_dir.rstrip("/")
-    if exists and fs.exists(f"{base}/_last_batch"):
-        try:
-            last_lineage, _, last_id = fs.read_text(
-                f"{base}/_last_batch"
-            ).strip().rpartition(":")
-            if last_lineage == lineage and batch_id <= int(last_id):
-                return  # replayed batch — already folded in
-        except Exception:
-            pass  # unreadable marker: fall through and apply
-    new_state = compute_new_state(exists)
     import time
 
-    staging = f"{base}{staging_prefix}{int(time.time() * 1000)}"
-    new_state.write.format(format).mode("overwrite").save(staging)
-    fs.write_text(f"{staging}/_last_batch", f"{lineage}:{batch_id}")
-    if fs.exists(base):
-        _atomic_swap(fs, base, staging)
-    else:
-        fs.rename(staging, base)
+    from ..sources.write import HadoopFs, _heal_dataset, _publish, _siblings
+
+    base = target_path.rstrip("/")
+    lineage = checkpoint_dir.rstrip("/")
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        spark = batch_df.sparkSession
+        fs = HadoopFs(spark, base)
+        exists = _heal_dataset(fs, base)
+        for orphan in _siblings(fs, base, staging_prefix):
+            fs.delete(orphan)
+        if exists and fs.exists(f"{base}/_last_batch"):
+            try:
+                last_lineage, _, last_id = fs.read_text(
+                    f"{base}/_last_batch"
+                ).strip().rpartition(":")
+                if last_lineage == lineage and batch_id <= int(last_id):
+                    return  # replayed batch — already folded in
+            except Exception:
+                pass  # unreadable marker: fall through and apply
+        state = spark.read.format(format).load(base) if exists else None
+        staging = f"{base}{staging_prefix}{int(time.time() * 1000)}"
+        fold(batch_df, state).write.format(format).mode("overwrite").save(
+            staging
+        )
+        fs.write_text(f"{staging}/_last_batch", f"{lineage}:{batch_id}")
+        _publish(fs, base, staging)
+
+    return sink
 
 
 def stream_agg_maintain(
@@ -570,26 +548,14 @@ def stream_agg_maintain(
 
     keys = [group_key] if isinstance(group_key, str) else list(group_key)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        base = target_path.rstrip("/")
+    def fold(batch_df: DataFrame, state: "DataFrame | None") -> DataFrame:
         changes = (
             batch_df if op_col is not None
             else batch_df.withColumn("__op", F.lit("I"))
         )
-
-        def compute_new_state(exists: bool) -> DataFrame:
-            if exists:
-                state = spark.read.format(format).load(base)
-                return apply_agg_delta(
-                    state.select(*state.columns), changes, keys, sums,
-                    count_col=count_col,
-                    op_col=op_col or "__op",
-                )
+        if state is None:
             dec = "decimal(27,6)"
-            empty = spark.createDataFrame(
+            state = batch_df.sparkSession.createDataFrame(
                 [],
                 changes.select(
                     *keys,
@@ -597,27 +563,13 @@ def stream_agg_maintain(
                     *[F.lit(0).cast(dec).alias(o) for o in sums],
                 ).schema,
             )
-            return apply_agg_delta(
-                empty, changes, keys, sums,
-                count_col=count_col, op_col=op_col or "__op",
-            )
-
-        _run_maintain_batch(
-            spark, target_path, checkpoint_dir, batch_id,
-            "__agg_", format, compute_new_state,
+        return apply_agg_delta(
+            state.select(*state.columns), changes, keys, sums,
+            count_col=count_col, op_col=op_col or "__op",
         )
 
-    w = (
-        stream_df.writeStream.outputMode("append")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-    )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return w.start()
+    sink = _maintain_sink(target_path, checkpoint_dir, "__agg_", format, fold)
+    return _start(stream_df, sink, checkpoint_dir, query_name, available_now)
 
 
 def stream_quality_monitor(
@@ -709,17 +661,7 @@ def stream_quality_monitor(
         )
         rep.write.format(format).mode("append").save(report_path)
 
-    w = (
-        stream_df.writeStream.outputMode("append")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-    )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return w.start()
+    return _start(stream_df, sink, checkpoint_dir, query_name, available_now)
 
 
 def _null_safe_state_merge(
@@ -748,6 +690,36 @@ def _null_safe_state_merge(
         F.coalesce(F.col(k), F.col(f"__bk_{k}")).alias(k) for k in keys
     ]
     return merged, key_cols
+
+
+def _sketch_fold(
+    keys: "Sequence[str]",
+    sketch_col: str,
+    agg: Column,
+    union: Callable[[str, str], Column],
+):
+    """The ``fold`` of the HLL, KLL and theta maintainers: ``agg``
+    sketches each key of the batch, ``union(old, new)`` merges a key
+    present in both the state and the batch, and a key in only one of
+    them keeps its sketch."""
+
+    def fold(batch_df: DataFrame, state: "DataFrame | None") -> DataFrame:
+        batch_sk = batch_df.groupBy(*keys).agg(agg.alias(sketch_col))
+        if state is None:
+            return batch_sk
+        state = state.select(*keys, F.col(sketch_col).alias("__old"))
+        merged, key_cols = _null_safe_state_merge(state, batch_sk, keys)
+        return merged.select(
+            *key_cols,
+            F.when(
+                F.col("__old").isNotNull() & F.col(sketch_col).isNotNull(),
+                union("__old", sketch_col),
+            )
+            .otherwise(F.coalesce("__old", sketch_col))
+            .alias(sketch_col),
+        )
+
+    return fold
 
 
 def stream_distinct_sketch_maintain(
@@ -789,52 +761,12 @@ def stream_distinct_sketch_maintain(
     cost ∝ state size + batch churn, never stream history.
     """
     keys = [group_key] if isinstance(group_key, str) else list(group_key)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        base = target_path.rstrip("/")
-        batch_sk = batch_df.groupBy(*keys).agg(
-            F.hll_sketch_agg(value_col, F.lit(int(lg_config_k))).alias(
-                "sketch"
-            )
-        )
-
-        def compute_new_state(exists: bool) -> DataFrame:
-            if not exists:
-                return batch_sk
-            state = spark.read.format(format).load(base).select(
-                *keys, F.col("sketch").alias("__old")
-            )
-            merged, key_cols = _null_safe_state_merge(state, batch_sk, keys)
-            return merged.select(
-                *key_cols,
-                F.when(
-                    F.col("__old").isNotNull()
-                    & F.col("sketch").isNotNull(),
-                    F.hll_union("__old", "sketch"),
-                )
-                .otherwise(F.coalesce("__old", "sketch"))
-                .alias("sketch"),
-            )
-
-        _run_maintain_batch(
-            spark, target_path, checkpoint_dir, batch_id,
-            "__sk_", format, compute_new_state,
-        )
-
-    w = (
-        stream_df.writeStream.outputMode("append")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
+    fold = _sketch_fold(
+        keys, "sketch", F.hll_sketch_agg(value_col, F.lit(int(lg_config_k))),
+        F.hll_union,
     )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return w.start()
+    sink = _maintain_sink(target_path, checkpoint_dir, "__sk_", format, fold)
+    return _start(stream_df, sink, checkpoint_dir, query_name, available_now)
 
 
 def stream_quantile_sketch_maintain(
@@ -859,7 +791,7 @@ def stream_quantile_sketch_maintain(
     quantile values are sketch estimates.
 
     Same exactly-once contract as its siblings (the shared
-    :func:`_run_maintain_batch` skeleton: crash healing, orphaned
+    :func:`_maintain_sink`: crash healing, orphaned
     staging sweep, lineage-keyed replay skip, atomic park-and-swap) —
     needed here even more than for HLL, because KLL folding is NOT
     idempotent (re-adding the same values inflates n and shifts
@@ -894,50 +826,11 @@ def stream_quantile_sketch_maintain(
     agg = getattr(F, f"kll_sketch_agg_{suffix}")
     pair_merge = getattr(F, f"kll_sketch_merge_{suffix}")
     sketch_col = f"qsketch__{suffix}__k{int(k)}"
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        base = target_path.rstrip("/")
-        batch_sk = batch_df.groupBy(*keys).agg(
-            agg(value_col, F.lit(int(k))).alias(sketch_col)
-        )
-
-        def compute_new_state(exists: bool) -> DataFrame:
-            if not exists:
-                return batch_sk
-            state = spark.read.format(format).load(base).select(
-                *keys, F.col(sketch_col).alias("__old")
-            )
-            merged, key_cols = _null_safe_state_merge(state, batch_sk, keys)
-            return merged.select(
-                *key_cols,
-                F.when(
-                    F.col("__old").isNotNull()
-                    & F.col(sketch_col).isNotNull(),
-                    pair_merge("__old", sketch_col),
-                )
-                .otherwise(F.coalesce("__old", sketch_col))
-                .alias(sketch_col),
-            )
-
-        _run_maintain_batch(
-            spark, target_path, checkpoint_dir, batch_id,
-            "__qs_", format, compute_new_state,
-        )
-
-    w = (
-        stream_df.writeStream.outputMode("append")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
+    fold = _sketch_fold(
+        keys, sketch_col, agg(value_col, F.lit(int(k))), pair_merge
     )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return w.start()
+    sink = _maintain_sink(target_path, checkpoint_dir, "__qs_", format, fold)
+    return _start(stream_df, sink, checkpoint_dir, query_name, available_now)
 
 
 def stream_freq_sketch_maintain(
@@ -978,7 +871,7 @@ def stream_freq_sketch_maintain(
     for KLL: without it a replayed batch would double-count.
 
     Same exactly-once contract as its siblings (shared
-    :func:`_run_maintain_batch`: crash healing, orphan-staging sweep,
+    :func:`_maintain_sink`: crash healing, orphan-staging sweep,
     lineage-keyed replay marker, atomic park-and-swap).  State column:
     ``fsketch`` (matches :func:`~...functions.stats.freq_sketch_rollup`
     so batch and streaming frequency state interoperate).
@@ -990,46 +883,24 @@ def stream_freq_sketch_maintain(
     """
     keys = [group_key] if isinstance(group_key, str) else list(group_key)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def fold(batch_df: DataFrame, state: "DataFrame | None") -> DataFrame:
         from ..functions.stats import merge_freq_sketches_agg
 
-        spark = batch_df.sparkSession
-        base = target_path.rstrip("/")
         batch_sk = batch_df.groupBy(*keys).agg(
             F.count_min_sketch(
                 value_col, F.lit(float(eps)), F.lit(float(confidence)),
                 F.lit(int(seed)),
             ).alias("fsketch")
         )
-
-        def compute_new_state(exists: bool) -> DataFrame:
-            if not exists:
-                return batch_sk
-            state = spark.read.format(format).load(base).select(
-                *keys, "fsketch"
-            )
-            return merge_freq_sketches_agg(
-                state.unionByName(batch_sk), group_cols=keys
-            )
-
-        _run_maintain_batch(
-            spark, target_path, checkpoint_dir, batch_id,
-            "__fs_", format, compute_new_state,
+        if state is None:
+            return batch_sk
+        return merge_freq_sketches_agg(
+            state.select(*keys, "fsketch").unionByName(batch_sk),
+            group_cols=keys,
         )
 
-    w = (
-        stream_df.writeStream.outputMode("append")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-    )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return w.start()
+    sink = _maintain_sink(target_path, checkpoint_dir, "__fs_", format, fold)
+    return _start(stream_df, sink, checkpoint_dir, query_name, available_now)
 
 
 def stream_theta_sketch_maintain(
@@ -1060,7 +931,7 @@ def stream_theta_sketch_maintain(
     the correctness line it is for KLL/CMS.
 
     Same exactly-once contract as its siblings (shared
-    :func:`_run_maintain_batch`: crash healing, orphan-staging sweep,
+    :func:`_maintain_sink`: crash healing, orphan-staging sweep,
     lineage-keyed replay marker, atomic park-and-swap).  State column
     ``sketch`` matches :func:`~...functions.stats.theta_sketch_rollup`
     so batch and streaming theta state interoperate.
@@ -1071,47 +942,9 @@ def stream_theta_sketch_maintain(
     cost ∝ state + churn, never stream history.
     """
     keys = [group_key] if isinstance(group_key, str) else list(group_key)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        base = target_path.rstrip("/")
-        batch_sk = batch_df.groupBy(*keys).agg(
-            F.theta_sketch_agg(value_col, F.lit(int(lg_k))).alias("sketch")
-        )
-
-        def compute_new_state(exists: bool) -> DataFrame:
-            if not exists:
-                return batch_sk
-            state = spark.read.format(format).load(base).select(
-                *keys, F.col("sketch").alias("__old")
-            )
-            merged, key_cols = _null_safe_state_merge(state, batch_sk, keys)
-            return merged.select(
-                *key_cols,
-                F.when(
-                    F.col("__old").isNotNull()
-                    & F.col("sketch").isNotNull(),
-                    F.theta_union("__old", "sketch", F.lit(int(lg_k))),
-                )
-                .otherwise(F.coalesce("__old", "sketch"))
-                .alias("sketch"),
-            )
-
-        _run_maintain_batch(
-            spark, target_path, checkpoint_dir, batch_id,
-            "__th_", format, compute_new_state,
-        )
-
-    w = (
-        stream_df.writeStream.outputMode("append")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
+    fold = _sketch_fold(
+        keys, "sketch", F.theta_sketch_agg(value_col, F.lit(int(lg_k))),
+        lambda old, new: F.theta_union(old, new, F.lit(int(lg_k))),
     )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return w.start()
+    sink = _maintain_sink(target_path, checkpoint_dir, "__th_", format, fold)
+    return _start(stream_df, sink, checkpoint_dir, query_name, available_now)

@@ -1000,3 +1000,115 @@ def test_output_counters_log_lines(spark, caplog):
         l.startswith("output result: 7 records") and "bytes" in l
         for l in lines
     )
+
+
+# -- crash healing of datasets rewritten in place ------------------------
+
+_HEAL_FIRST = [(1, 10.0), (2, 20.0)]
+_HEAL_SECOND = [(2, 25.0), (3, 30.0)]
+
+
+def _kv(spark, rows):
+    return spark.createDataFrame(rows, "k long, v double")
+
+
+def _heal_merge(spark, base, work, rows):
+    from asakusafw_spark_spark.sources.write import merge_upsert
+
+    merge_upsert(base, _kv(spark, rows), "k")
+
+
+def _heal_compact(spark, base, work, rows):
+    from asakusafw_spark_spark.sources import compact_files
+
+    if rows is _HEAL_FIRST:
+        write_flat(_kv(spark, rows).repartition(2), base)
+    else:
+        compact_files(spark, base)
+
+
+def _heal_zorder(spark, base, work, rows):
+    from asakusafw_spark_spark.sources import write_zordered
+
+    write_zordered(_kv(spark, rows), base, ["k"], bits=2, num_files=2)
+
+
+def _heal_stream_agg(spark, base, work, rows):
+    import glob
+    import shutil
+
+    from asakusafw_spark_spark.streaming import stream_agg_maintain
+
+    feed = work / "feed"
+    feed.mkdir(parents=True)
+    _kv(spark, rows).coalesce(1).write.parquet(str(work / "stage"))
+    shutil.copy(glob.glob(f"{work}/stage/part-*.parquet")[0], feed / "0.parquet")
+    stream = spark.readStream.schema("k long, v double").parquet(str(feed))
+    stream_agg_maintain(
+        stream, base, "k", {"v": "v"}, str(work / "ck"),
+        query_name=f"t_heal_{work.name}",
+    )
+
+
+@pytest.fixture
+def hadoop_cwd(spark, tmp_path):
+    """Resolve relative Hadoop paths (Spark's writers and readers, and
+    ``HadoopFs``) against ``tmp_path`` for the test."""
+    jvm = spark._jvm
+    local = jvm.org.apache.hadoop.fs.FileSystem.getLocal(
+        spark._jsc.hadoopConfiguration()
+    )
+    prev = local.getWorkingDirectory()
+    local.setWorkingDirectory(jvm.org.apache.hadoop.fs.Path(str(tmp_path)))
+    try:
+        yield tmp_path
+    finally:
+        local.setWorkingDirectory(prev)
+
+
+@pytest.mark.parametrize("writer, relative, want", [
+    (_heal_merge, False, {1: 10.0, 2: 25.0, 3: 30.0}),
+    (_heal_merge, True, {1: 10.0, 2: 25.0, 3: 30.0}),
+    (_heal_compact, False, {1: 10.0, 2: 20.0}),
+    (_heal_zorder, False, {2: 25.0, 3: 30.0}),
+    (_heal_stream_agg, False, {1: 10.0, 2: 45.0, 3: 30.0}),
+], ids=["merge_upsert", "merge_upsert_relative", "compact_files",
+        "write_zordered", "stream_agg_maintain"])
+def test_rewrite_heals_a_crashed_swap(spark, hadoop_cwd, writer, relative, want):
+    """A crash between the two renames of a swap leaves the base missing
+    and its data parked as ``<base>__old_*``.  The next rewrite restores
+    it before it reads or replaces the dataset, and leaves no parked
+    copy behind."""
+    import glob
+
+    path = str(hadoop_cwd / "ds")
+    base = "ds" if relative else path
+    writer(spark, base, hadoop_cwd / "first", _HEAL_FIRST)
+    os.rename(path, f"{path}__old_1")  # the crash window state
+
+    writer(spark, base, hadoop_cwd / "second", _HEAL_SECOND)
+    got = {r.k: float(r.v) for r in spark.read.parquet(path).collect()}
+    assert got == want
+    assert not glob.glob(f"{path}__old_*")
+
+
+def test_merge_upsert_keeps_the_callers_cache(spark, tmp_path):
+    """``merge_upsert`` releases only what it persisted itself: an
+    update frame the caller persisted is still cached afterwards."""
+    from asakusafw_spark_spark.sources.write import merge_upsert
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    target = str(tmp_path / "dim")
+    merge_upsert(target, _kv(spark, _HEAL_FIRST), "k")
+    upd = _kv(spark, _HEAL_SECOND).persist()
+    try:
+        assert cm.lookupCachedData(upd._jdf).isDefined()
+        merge_upsert(target, upd, "k")
+        assert cm.lookupCachedData(upd._jdf).isDefined()
+    finally:
+        upd.unpersist()
+    own = _kv(spark, [(4, 40.0)])
+    merge_upsert(target, own, "k")
+    assert not cm.lookupCachedData(own._jdf).isDefined()
+    got = {r.k: r.v for r in spark.read.parquet(target).collect()}
+    assert got == {1: 10.0, 2: 25.0, 3: 30.0, 4: 40.0}

@@ -177,6 +177,20 @@ def test_second_promotion_of_a_key_replaces_the_first(homes):
     assert cds.plan_launch({}, homes).archive == os.path.join(plan.cache_dir, kept)
 
 
+def test_a_launch_that_maps_an_archive_prunes_the_keys_other_archives(homes):
+    """Two whole archives of one key (both made before promotion pruned
+    its duplicates): the launch that maps one removes the other."""
+    key = cds.plan_launch({}, homes).key
+    cache = cds.cache_dir(homes)
+    for size in (64, 96):
+        with open(os.path.join(cache, f"driver-{key}-{size}.jsa"), "wb") as f:
+            f.write(b"\xa8\xab\x0b\xf0" + b"\1" * (size - 4))
+    plan = cds.plan_launch({}, homes)
+    assert plan.mode == "hit"
+    assert glob.glob(os.path.join(cache, "*.jsa")) == [plan.archive]
+    assert cds.plan_launch({}, homes).archive == plan.archive
+
+
 # -- real launches ------------------------------------------------------
 
 LAUNCH = """

@@ -1092,3 +1092,59 @@ def test_stage_split_feed_matches_filtered_writes(spark, sf_dir, tmp_path):
     empt = spark.read.parquet(f"{feed2}/0001.parquet")
     assert empt.count() == 0
     assert empt.columns == ["event_id", "event_type", "user_id"]
+
+
+def test_stream_agg_maintain_running_query_equals_the_drain(spark, tmp_path):
+    """``available_now=False`` returns a running query; after
+    ``processAllAvailable()`` and ``stop()`` its state table equals the
+    one an ``availableNow`` drain of the same feed leaves."""
+    import glob as g
+    import shutil
+    import time as _t
+    from decimal import Decimal
+
+    from asakusafw_spark_spark.streaming import stream_agg_maintain
+
+    src = tmp_path / "feed"
+    src.mkdir()
+    batches = [[("a", 10.0), ("b", 5.0)], [("a", 1.0), ("c", 7.0)]]
+    for i, rows in enumerate(batches):
+        stage = tmp_path / f"s{i}"
+        spark.createDataFrame(rows, "g string, v double").coalesce(
+            1
+        ).write.parquet(str(stage))
+        shutil.copy(g.glob(f"{stage}/part-*.parquet")[0], src / f"{i:04d}.parquet")
+        _t.sleep(1.1)
+
+    def run(name, available_now):
+        stream = (
+            spark.readStream.schema("g string, v double")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src))
+        )
+        return stream_agg_maintain(
+            stream, str(tmp_path / name), "g", {"sum_v": "v"},
+            str(tmp_path / f"ck_{name}"), query_name=f"t_{name}",
+            available_now=available_now,
+        )
+
+    run("drained", True)
+    q = run("live", False)
+    try:
+        assert q.isActive
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert not q.isActive
+
+    def state(name):
+        return sorted(
+            (r["g"], r["n"], r["sum_v"])
+            for r in spark.read.parquet(str(tmp_path / name)).collect()
+        )
+
+    assert state("live") == state("drained")
+    assert state("live") == [
+        ("a", 2, Decimal("11.000000")), ("b", 1, Decimal("5.000000")),
+        ("c", 1, Decimal("7.000000")),
+    ]

@@ -25,11 +25,13 @@ The sf1 full-registry sweep is NOT run here (it is a ~1 h marathon
 with its own batch runner): run ``python tools/sf1_partsupp_check.py
 --keep`` separately at round close.
 
-Usage: python tools/run_gates.py <round> [gate ...]
-  e.g. python tools/run_gates.py 16            # all gates
-       python tools/run_gates.py 16 combined layout
-Writes LOCAL_VERIFY_r<round>_<gate>.json into the repo root and prints
-a one-line summary per gate; exit code = number of non-green gates.
+Usage: python tools/run_gates.py <label> [gate ...]
+  e.g. python tools/run_gates.py pr12           # all gates
+       python tools/run_gates.py pr12 combined layout
+Writes LOCAL_VERIFY_<label>_<gate>.json into the repo root (the label
+is used verbatim: ``pr12 sf0.01`` -> LOCAL_VERIFY_pr12_sf0.01.json) and
+prints a one-line summary per gate; exit code = number of non-green
+gates.
 """
 
 from __future__ import annotations
@@ -65,7 +67,7 @@ def _build_robustness(dst: str, src: str, **kw) -> None:
 def main() -> int:
     if len(sys.argv) < 2:
         raise SystemExit(__doc__)
-    rnd = int(sys.argv[1])
+    label = sys.argv[1]
     only = set(sys.argv[2:])
 
     import tools.combined_corpus as C
@@ -102,7 +104,7 @@ def main() -> int:
         t0 = time.time()
         if build is not None:
             build()
-        out = os.path.join(REPO, f"LOCAL_VERIFY_r{rnd}_{name}.json")
+        out = os.path.join(REPO, f"LOCAL_VERIFY_{label}_{name}.json")
         rc = _sweep(sf_dir, out)
         n_green = n_q = -1
         if os.path.exists(out):
